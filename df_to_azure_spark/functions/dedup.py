@@ -188,19 +188,6 @@ def _minhash_signatures_expr(
     )
 
 
-# at most one persisted signature frame per session (see minhash_lsh_pairs)
-_SIG_CACHE: list[DataFrame] = []
-
-
-def clear_signature_cache() -> None:
-    """Unpersist the signature frame cached by the last
-    ``minhash_lsh_pairs`` call.  Callers that materialize the result and
-    want the executor memory back immediately can call this; otherwise
-    the next ``minhash_lsh_pairs`` call releases it."""
-    while _SIG_CACHE:
-        _SIG_CACHE.pop().unpersist()
-
-
 def _banded(sigs: DataFrame, id_col: str, num_hashes: int, bands: int):
     """Explode a signature frame into ``(id, band, k0..)`` band-bucket
     rows.  The bucket key is the band's signature slice VERBATIM, packed
@@ -265,10 +252,6 @@ def minhash_lsh_pairs(
     # AQE (an InMemoryRelation hides them — the winnow lesson above),
     # measured 3.16 -> 2.83 s at sf0.1, rows identical.  At cluster
     # scale this pin becomes a checkpoint/table write between stages.
-    # clear_signature_cache() stays for callers of the old contract (the
-    # pinned blocks are released by the ContextCleaner once the frame is
-    # unreferenced).
-    clear_signature_cache()
     sigs = minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_n
     ).localCheckpoint()

@@ -1238,19 +1238,6 @@ def lsh_topk_multiprobe(
     )
 
 
-# at most one persisted assignment frame per session (semdedup reuses the
-# clustered/ranked frame on three plan branches — candidate sides + final
-# output — so without a persist the scan+assign+window would run 3x)
-_SEMDEDUP_CACHE: list[DataFrame] = []
-
-
-def clear_semdedup_cache() -> None:
-    """Unpersist the assignment frame cached by the last ``semdedup``
-    call (otherwise the next call releases it)."""
-    while _SEMDEDUP_CACHE:
-        _SEMDEDUP_CACHE.pop().unpersist()
-
-
 def exemplar_centroids(
     df: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> list[list[float]]:
@@ -1310,7 +1297,6 @@ def semdedup(
     (SemDeDup uses ~100k clusters for billions of vectors) precisely so
     clusters stay far below any cap.
     """
-    clear_semdedup_cache()
     v = _spread(df).select(
         F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
     )
@@ -1321,7 +1307,6 @@ def semdedup(
     # pinned RDD scan keeps AQE's runtime stats where an
     # InMemoryRelation hides them (measured 4.04 -> 3.45 s at sf0.1,
     # rows identical — same lesson as dedup.winnow_overlap_pairs).
-    # clear_semdedup_cache() stays for the old release contract.
     ranked = v.withColumn("rk", F.row_number().over(wc)).localCheckpoint()
     capped = ranked.where(F.col("rk") <= hot_cluster_cap).withColumn(
         "nrm", norm(F.col("v"))

@@ -190,13 +190,10 @@ def ckpt_from_dicts(
 
 def ckpt_to_dicts(tbl: pa.Table) -> dict[str, dict]:
     """Inverse of :func:`ckpt_from_dicts`: re-materialize the sidecar
-    rows as JSON-manifest per-file stats dicts.  This is the legacy
-    bridge for a ``checkpoint_format`` switch — a table whose chain
-    roots at a parquet sidecar being re-checkpointed in ``'json'`` mode
-    would otherwise carry only the post-root delta's stats in the full
-    JSON manifest, silently dropping zone maps for the bulk of the
-    table.  O(files) Python dicts by construction (that IS the json
-    format's cost — the parquet default never calls this).
+    rows as JSON-manifest per-file stats dicts.  ``delete_where`` calls
+    it on the candidate rows only, because its all-rows-match test reads
+    the dict form.  O(rows passed) Python dicts by construction — pass
+    a filtered table, never a whole large sidecar.
 
     Encoding notes: a column entry exists iff its null count is non-null
     (``ckpt_from_dicts`` writes all-None triples for absent entries); a

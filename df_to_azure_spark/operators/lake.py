@@ -295,7 +295,7 @@ class ParquetLake:
         ensure_unique_keys(df, keys)
         parts = partition_by or self.partition_columns(table)
         existing = self.read(table)
-        merged = upsert_frames(df, existing, keys)
+        merged = upsert_frames(df, existing, keys, check_keys=False)
         self._commit_rewrite(merged, table, partition_by=parts or None)
 
     def delete(

@@ -47,14 +47,22 @@ cheaper than the recursive listing a plain parquet scan does).  Commit
 cost is bounded the same way Delta bounds it: appends and
 partition-scoped upserts write O(delta) manifests (``add``/``remove``
 against the previous version), and every ``checkpoint_interval``-th
-version is a CHECKPOINT — by default a columnar parquet sidecar
+version is a CHECKPOINT — a columnar parquet sidecar
 (``operators/ckpt.py``) next to an O(delta) JSON commit, advanced from
 the previous sidecar with Arrow kernels — so resolution walks at most
 ``checkpoint_interval`` files no matter how old the table is, and at
 10⁶ files a cold resolve is ~2 s / a scan plan ~0.1 s where a
 single-JSON checkpoint cost 13 s to parse before pruning even started.
-Manifests also carry per-file zone-map stats (min/max/null-count),
-which ``scan`` uses for read-side file skipping.
+Full JSON manifests (``create``, rewrites, ``restore`` and tables
+written by older releases that checkpointed as full JSON) root a chain
+just as a sidecar does.  Manifests also carry per-file zone-map stats
+(min/max/null-count), which ``scan`` uses for read-side file skipping.
+
+Every write reads the table state it builds on ONCE — the raw manifest
+of its expected version (:meth:`VersionedLake._snapshot`) — and hands
+that snapshot down to staging and commit, which take the layout
+declarations (``partition_by``, ``dict_columns``, ``bloom_columns`` /
+``bloom_bits``) and carried ``batch_ids`` from it.
 """
 
 from __future__ import annotations
@@ -77,6 +85,14 @@ from df_to_azure_spark.operators.upsert import upsert_frames
 __all__ = ["VersionedLake"]
 
 _V_WIDTH = 20  # zero-padded version width: lexicographic == numeric order
+
+# checkpoint sidecars at or above this many rows (files) stay LAZY on
+# resolve — footer metadata only — and scan() plans them with a
+# distributed mapInArrow job instead of a driver-side Arrow read
+# (SCALE_r14: at 10⁷ files the driver-side cold read alone is ~9 s and
+# ~1 GB RSS; below the threshold the driver path is faster, so
+# 10⁶-file tables keep the measured 0.9 s resolve)
+_SPARK_PRUNE_THRESHOLD = 4_000_000
 
 # zone-map stats are recorded for at most this many leading eligible
 # columns (Delta's dataSkippingNumIndexedCols default): stats cost and
@@ -380,11 +396,12 @@ class _LazyResolved(dict):
     every path) pays it once, memoized in place.  ``n_files`` is always
     present (or lazily computed by a stored closure on big-sidecar
     chains) so counting consumers (history, empty-table checks,
-    pruning totals) stay cheap.  Above ``spark_prune_threshold`` rows
-    even ``ckpt_table`` itself is lazy: the view carries only the
-    sidecar's LOCAL PATH (``ckpt_path``) plus its footer row count,
-    and ``scan()`` plans through a distributed job without the driver
-    ever loading the checkpoint (``operators/ckpt.spark_keep_rels``)."""
+    pruning totals) stay cheap.  At ``_SPARK_PRUNE_THRESHOLD`` rows
+    and above even ``ckpt_table`` itself is lazy: the view carries
+    only the sidecar's LOCAL PATH (``ckpt_path``) plus its footer row
+    count, and ``scan()`` plans through a distributed job without the
+    driver ever loading the checkpoint
+    (``operators/ckpt.spark_keep_rels``)."""
 
     def __missing__(self, key):
         import pyarrow as pa
@@ -450,44 +467,25 @@ class VersionedLake(ParquetLake):
         spark: SparkSession,
         root: str,
         checkpoint_interval: int = 20,
-        checkpoint_format: str = "parquet",
-        spark_prune_threshold: int = 4_000_000,
     ):
         super().__init__(spark, root)
         if checkpoint_interval < 1:
             raise ValueError("checkpoint_interval must be >= 1")
-        if checkpoint_format not in ("parquet", "json"):
-            raise ValueError("checkpoint_format must be 'parquet' or 'json'")
-        # every Nth version is written as a FULL manifest; versions in
-        # between may be O(delta) manifests chaining off the previous
-        # version (Delta's checkpoint/log split, one file per version).
-        # With the default 'parquet' format the periodic checkpoint is
-        # an O(delta) JSON commit plus a COLUMNAR sidecar
-        # (v<N>.ckpt.parquet, operators/ckpt.py) — measured this round:
-        # at 10⁶ files a single-JSON checkpoint costs 9.2 s to
-        # serialize and 13 s to cold-parse (433 MB), the parquet
-        # sidecar ~1 s to write (4 MB zstd) and ~2 s to load, with
-        # scan() pruning running as Arrow kernels over the stat columns
-        # instead of a Python dict walk.  'json' keeps the round-12
-        # behavior (full JSON manifest at every interval-th version).
+        # every Nth version is a CHECKPOINT: an O(delta) JSON commit
+        # plus a COLUMNAR sidecar (v<N>.ckpt.parquet, operators/ckpt.py);
+        # versions in between chain off the previous version (Delta's
+        # checkpoint/log split, one file per version).  At 10⁶ files a
+        # single-JSON checkpoint cost 9.2 s to serialize and 13 s to
+        # cold-parse (433 MB), the sidecar ~1 s to write (4 MB zstd)
+        # and ~2 s to load, with scan() pruning running as Arrow
+        # kernels over the stat columns instead of a Python dict walk.
         self.checkpoint_interval = checkpoint_interval
-        self.checkpoint_format = checkpoint_format
-        # sidecars at or above this many rows (files) stay LAZY on
-        # resolve — footer metadata only — and scan() plans them with a
-        # distributed mapInArrow job instead of a driver-side Arrow
-        # read (SCALE_r14: at 10⁷ files the driver-side cold read alone
-        # is ~9 s and ~1 GB RSS; below the threshold the driver path is
-        # faster, so 10⁶-file tables keep the measured 0.9 s resolve)
-        self.spark_prune_threshold = spark_prune_threshold
         self._read_version: dict[str, int] = {}
         self._pending_batch: str | None = None
         # raw + resolved manifest caches: manifests are immutable once
         # committed, so cached entries never go stale; bounded below
         self._raw_cache: dict[tuple[str, int], dict] = {}
         self._resolved_cache: dict[tuple[str, int], dict] = {}
-        # zone-map stats of the most recent _stage_files call, keyed by
-        # the staged table-relative path (consumed by the commit wiring)
-        self._pending_stats: dict[str, dict] = {}
         # (files read, files total) of the most recent scan() — the
         # observable data-skipping effect, probed by tests and SCALE_r12
         self.last_scan_files: tuple[int, int] | None = None
@@ -496,8 +494,6 @@ class VersionedLake(ParquetLake):
         # effect (carried files moved through the O(delta) commit
         # without being read or restaged)
         self.last_rewrite_files: tuple[int, int, int] | None = None
-        # create-time bloom declaration being committed (cleared after)
-        self._pending_bloom_spec: tuple[list[str], int | None] | None = None
         # probe-literal hash memo: (dtype simpleString, value) →
         # (h1, h2) from a one-row Spark job — the literal is hashed by
         # the SAME engine expressions that hashed the rows, so write
@@ -632,7 +628,7 @@ class VersionedLake(ParquetLake):
             import pyarrow.parquet as pq
 
             n = pq.read_metadata(local).num_rows
-            if n >= self.spark_prune_threshold:
+            if n >= _SPARK_PRUNE_THRESHOLD:
                 base = {"ckpt_path": local, "n_files": n}
         if not base:
             tbl = ckpt_from_bytes(self._read_bytes(path))
@@ -821,49 +817,35 @@ class VersionedLake(ParquetLake):
     def exists(self, table: str) -> bool:
         return self.current_version(table) is not None
 
+    def _snapshot(self, table: str, version: int | None) -> dict:
+        """The table state a write builds on: the raw manifest of
+        ``version`` (``{}`` for an absent table).  Each write reads it
+        ONCE and hands it down — staging and commit take the layout
+        declarations (``partition_by``, ``dict_columns``,
+        ``bloom_columns``/``bloom_bits``) from it, and carried
+        ``batch_ids`` come from it — so a declaration made at ``create``
+        is honored by every later write."""
+        return {} if version is None else self._load_manifest(table, version)
+
+    def _latest(self, table: str) -> dict:
+        return self._snapshot(table, self.current_version(table))
+
     def bloom_stats_columns(self, table: str) -> list[str]:
         """Columns the table declared for per-file bloom indexes."""
-        return self._bloom_spec_for(table)[0]
-
-    def _bloom_spec_for(self, table: str) -> tuple[list[str], int | None]:
-        """(bloom_columns, bloom_bits) in effect for the next write of
-        ``table``: the pending create-time declaration if one is being
-        committed, else the current manifest's — so the declaration
-        made at ``create`` is honored by every later write, exactly
-        like ``dict_columns``."""
-        if self._pending_bloom_spec is not None:
-            return self._pending_bloom_spec
-        v = self.current_version(table)
-        if v is None:
-            return [], None
-        raw = self._load_manifest(table, v)
-        return (
-            list(raw.get("bloom_columns") or []),
-            raw.get("bloom_bits"),
-        )
+        return list(self._latest(table).get("bloom_columns") or [])
 
     def dict_stats_columns(self, table: str) -> list[str]:
         """Columns the table declared for dictionary stats (empty when
-        none) — every write path re-reads this so the declaration made
-        at ``create`` time is honored by appends and rewrites."""
-        v = self.current_version(table)
-        if v is None:
-            return []
-        return list(self._load_manifest(table, v).get("dict_columns") or [])
+        none)."""
+        return list(self._latest(table).get("dict_columns") or [])
 
     def partition_columns(self, table: str) -> list[str]:
-        v = self.current_version(table)
-        if v is None:
-            return []
-        return list(self._load_manifest(table, v).get("partition_by") or [])
+        return list(self._latest(table).get("partition_by") or [])
 
     def has_batch(self, table: str, batch_id: str) -> bool:
         """True when ``batch_id`` was recorded by a committed write —
         the atomic replacement for the plain lake's marker files."""
-        v = self.current_version(table)
-        if v is None:
-            return False
-        return batch_id in self._load_manifest(table, v).get("batch_ids", [])
+        return batch_id in self._latest(table).get("batch_ids", [])
 
     # -- reads ---------------------------------------------------------
     def read(
@@ -1402,7 +1384,7 @@ class VersionedLake(ParquetLake):
             # (operators/ckpt.py — same proofs as _file_may_match,
             # fuzz-pinned never to drop a file the dict path keeps);
             # only the post-root delta files walk the dict path.  On a
-            # still-lazy big sidecar (>= spark_prune_threshold rows)
+            # still-lazy big sidecar (>= _SPARK_PRUNE_THRESHOLD rows)
             # the SAME mask runs as a distributed mapInArrow job over
             # the sidecar parquet — the driver never loads the
             # checkpoint; bloom-probed scans materialize instead (the
@@ -1887,25 +1869,26 @@ class VersionedLake(ParquetLake):
             return None
 
     def _stage_files(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str] | None,
-        dict_columns: list[str] | None = None,
-    ) -> tuple[list[str], str]:
+        self, df: DataFrame, table: str, snap: dict
+    ) -> tuple[list[str], str, dict[str, dict]]:
         """Write ``df``'s part-files under ``files/`` with a unique
-        commit prefix and return their table-relative paths.  Until a
-        manifest references them they are invisible orphans — a crash
-        here changes nothing a reader can see.  Zone-map stats for the
-        staged files land in ``self._pending_stats`` (keyed by the
-        returned paths) for the committing caller to record."""
+        commit prefix, laid out and indexed as the snapshot ``snap``
+        declares (``partition_by``, ``dict_columns``, ``bloom_columns``
+        / ``bloom_bits``).  Returns their table-relative paths, the
+        frame's schema JSON and the staged files' zone-map stats keyed
+        by those paths.  Until a manifest references them the files are
+        invisible orphans — a crash here changes nothing a reader can
+        see."""
+        partition_by = list(snap.get("partition_by") or [])
+        dict_columns = list(snap.get("dict_columns") or [])
+        bcols = list(snap.get("bloom_columns") or [])
+        bbits = snap.get("bloom_bits")
         cid = uuid.uuid4().hex[:12]
         stage = f"{self.table_dir(table)}/.stage-{cid}"
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(stage)
-        bcols, bbits = self._bloom_spec_for(table)
         footer_max = (
             self._staged_max_rows(stage) if bcols and not bbits else None
         )
@@ -2010,8 +1993,7 @@ class VersionedLake(ParquetLake):
             for rel in fallback:
                 staged_stats.pop(rel, None)
         fs.delete(stage_path, True)
-        self._pending_stats = staged_stats
-        return sorted(rels), df.schema.json()
+        return sorted(rels), df.schema.json(), staged_stats
 
     def _publish_manifest(self, table: str, version: int, payload: str) -> bool:
         """Put-if-absent of one complete manifest — the LogStore seam.
@@ -2068,38 +2050,45 @@ class VersionedLake(ParquetLake):
             return False
         return True
 
+    @staticmethod
+    def _declarations(snap: dict) -> dict:
+        """The table-level declarations every commit carries forward
+        from the snapshot it builds on."""
+        out = {
+            "partition_by": list(snap.get("partition_by") or []),
+            "dict_columns": list(snap.get("dict_columns") or []),
+        }
+        if snap.get("bloom_columns"):
+            out["bloom_columns"] = list(snap["bloom_columns"])
+            if snap.get("bloom_bits"):
+                out["bloom_bits"] = int(snap["bloom_bits"])
+        return out
+
     def _commit(
         self,
         table: str,
         files: list[str],
-        partition_by: list[str] | None,
+        snap: dict,
         schema_json: str,
         expected_version: int | None,
         batch_ids: list[str],
         stats: dict[str, dict] | None = None,
         op: str = "commit",
-        dict_columns: list[str] | None = None,
     ) -> int:
-        """Atomically publish version ``expected_version + 1`` through
-        the :meth:`_publish_manifest` seam: the first committer wins and
-        every loser raises ``ConcurrentWriteError`` with nothing
-        changed."""
+        """Atomically publish version ``expected_version + 1`` as a full
+        manifest through the :meth:`_publish_manifest` seam, declaring
+        ``snap``'s layout: the first committer wins and every loser
+        raises ``ConcurrentWriteError`` with nothing changed."""
         n = (expected_version or 0) + 1
         doc = {
             "version": n,
             "op": op,
             "files": files,
-            "partition_by": list(partition_by or []),
-            "dict_columns": list(dict_columns or []),
+            **self._declarations(snap),
             "schema": schema_json,
             "batch_ids": sorted(batch_ids),
             "committed_ms": int(time.time() * 1000),
         }
-        bcols, bbits = self._bloom_spec_for(table)
-        if bcols:
-            doc["bloom_columns"] = bcols
-            if bbits:
-                doc["bloom_bits"] = int(bbits)
         if stats:
             in_list = set(files)
             kept = {r: stats[r] for r in sorted(stats) if r in in_list}
@@ -2149,99 +2138,51 @@ class VersionedLake(ParquetLake):
         table: str,
         add: list[str],
         remove: list[str],
-        partition_by: list[str] | None,
+        snap: dict,
         schema_json: str,
         expected_version: int | None,
         batch_ids: list[str],
         stats: dict[str, dict] | None = None,
         op: str = "commit",
-        dict_columns: list[str] | None = None,
     ) -> int:
         """Commit version ``expected_version + 1`` as an O(delta)
         manifest — ``add``/``remove`` against the previous version plus
         stats for added files only — instead of rewriting the full live
-        list.  Every ``checkpoint_interval``-th version is materialized
-        as a CHECKPOINT: with the default ``checkpoint_format='parquet'``
-        that is an O(delta) JSON commit plus a columnar parquet sidecar
-        (built by ADVANCING the previous sidecar with Arrow kernels, so
-        even the checkpoint's cost never re-serializes the table as
-        JSON); in legacy 'json' mode it is a full JSON manifest.  Any
-        version with no predecessor is a full JSON manifest.  Either
+        list.  Every ``checkpoint_interval``-th version is a CHECKPOINT:
+        the O(delta) JSON commit plus a columnar parquet sidecar (built
+        by ADVANCING the previous sidecar with Arrow kernels, so even
+        the checkpoint's cost never re-serializes the table as JSON).
+        A version with no predecessor is a full JSON manifest.  Either
         way the resolution chain stays bounded and commit cost stays
         proportional to the write, not the table.  A sidecar write that
         fails AFTER the JSON commit is non-fatal (Delta's checkpoint
         contract): readers fall through to the previous root with a
         longer — still bounded — walk, and the next checkpoint heals
         the chain."""
-        n = (expected_version or 0) + 1
-        checkpoint_due = (
-            expected_version is not None
-            and n % self.checkpoint_interval == 0
-        )
-        if expected_version is None or (
-            checkpoint_due and self.checkpoint_format == "json"
-        ):
-            base = (
-                self.resolve_manifest(table, expected_version)
-                if expected_version is not None
-                else {"files": [], "stats": {}}
-            )
-            files = sorted(
-                (set(base["files"]) - set(remove)) | set(add)
-            )
-            fset = set(files)
-            if _is_ckpt_rooted(base):
-                # legacy 'json' checkpoint over a parquet-rooted chain
-                # (a checkpoint_format switch): the resolved view's dict
-                # stats cover only the post-root delta — re-materialize
-                # the bulk's stats from the sidecar columns so the full
-                # JSON manifest keeps the whole table's zone maps
-                from df_to_azure_spark.operators.ckpt import ckpt_to_dicts
-
-                merged = {
-                    r: s
-                    for r, s in ckpt_to_dicts(base["ckpt_table"]).items()
-                    if r in fset
-                }
-            else:
-                merged = {}
-            merged.update(
-                {
-                    r: s
-                    for r, s in base.get("stats", {}).items()
-                    if r in fset
-                }
-            )
-            merged.update(stats or {})
+        if expected_version is None:
             return self._commit(
-                table, files, partition_by, schema_json,
-                expected_version, batch_ids, stats=merged, op=op,
-                dict_columns=dict_columns,
+                table, sorted(set(add)), snap, schema_json, None,
+                batch_ids, stats=stats, op=op,
             )
+        n = expected_version + 1
         doc = {
             "version": n,
             "op": op,
             "base": expected_version,
             "add": sorted(add),
             "remove": sorted(remove),
-            "partition_by": list(partition_by or []),
-            "dict_columns": list(dict_columns or []),
+            **self._declarations(snap),
             "schema": schema_json,
             "batch_ids": sorted(batch_ids),
             "committed_ms": int(time.time() * 1000),
         }
-        bcols, bbits = self._bloom_spec_for(table)
-        if bcols:
-            doc["bloom_columns"] = bcols
-            if bbits:
-                doc["bloom_bits"] = int(bbits)
         if stats:
             in_add = set(add)
             kept = {r: stats[r] for r in sorted(stats) if r in in_add}
             if kept:
                 doc["stats"] = kept
         result = self._publish_doc(table, n, doc)
-        if checkpoint_due:
+        if n % self.checkpoint_interval == 0:
             self._write_ckpt_sidecar(table, n)
         return result
 
@@ -2293,15 +2234,10 @@ class VersionedLake(ParquetLake):
                 exc_info=True,
             )
 
-    def _carry_batches(self, table: str, batch_id: str | None) -> list[str]:
-        v = self.current_version(table)
-        prior = (
-            self._load_manifest(table, v).get("batch_ids", [])
-            if v is not None
-            else []
-        )
+    def _carry_batches(self, snap: dict, batch_id: str | None) -> list[str]:
+        """``snap``'s batch markers plus this write's own batch id."""
         b = batch_id if batch_id is not None else self._pending_batch
-        return sorted(set(prior) | ({b} if b else set()))
+        return sorted(set(snap.get("batch_ids", [])) | ({b} if b else set()))
 
     # -- writes ----------------------------------------------------------
     def write(
@@ -2383,23 +2319,18 @@ class VersionedLake(ParquetLake):
                 df = df.repartitionByRange(*sort_by)
             df = df.sortWithinPartitions(*sort_by)
         expected = self.current_version(table)
-        self._pending_bloom_spec = (
-            list(bloom_columns or []),
-            int(bloom_bits) if bloom_bits else None,
+        layout = {
+            "partition_by": partition_by,
+            "dict_columns": dict_columns,
+            "bloom_columns": bloom_columns,
+            "bloom_bits": bloom_bits,
+        }
+        files, schema, stats = self._stage_files(df, table, layout)
+        b = batch_id if batch_id is not None else self._pending_batch
+        self._commit(
+            table, files, layout, schema, expected, [b] if b else [],
+            stats=stats, op="create",
         )
-        try:
-            files, schema = self._stage_files(
-                df, table, partition_by, dict_columns
-            )
-            b = batch_id if batch_id is not None else self._pending_batch
-            self._commit(
-                table, files, partition_by, schema, expected,
-                [b] if b else [],
-                stats=self._pending_stats, op="create",
-                dict_columns=dict_columns,
-            )
-        finally:
-            self._pending_bloom_spec = None
 
     def append(
         self,
@@ -2426,23 +2357,24 @@ class VersionedLake(ParquetLake):
         last_err: Exception | None = None
         for _ in range(max(1, _retries)):
             expected = self.current_version(table)
-            if expected is None:
-                parts = list(partition_by or [])
-                dcols: list[str] = []
-                mschema = None
-            else:
-                m = self.resolve_manifest(table, expected)
-                # an existing table's layout wins: appending flat files
-                # into a hive-partitioned tree (or vice versa) would make
-                # the read-side directory structures conflict
-                parts = list(m.get("partition_by") or partition_by or [])
-                dcols = list(m.get("dict_columns") or [])
-                mschema = m.get("schema") if _resolved_count(m) else None
+            snap = self._snapshot(table, expected)
+            # an existing table's layout wins: appending flat files into
+            # a hive-partitioned tree (or vice versa) would make the
+            # read-side directory structures conflict
+            layout = {
+                **snap,
+                "partition_by": snap.get("partition_by") or partition_by,
+            }
+            mschema = None
+            if expected is not None and _resolved_count(
+                self.resolve_manifest(table, expected)
+            ):
+                mschema = snap["schema"]
+            parts = list(layout["partition_by"] or [])
             if files is None or staged_parts != parts:
-                files, schema = self._stage_files(
-                    df, table, parts or None, dcols or None
+                files, schema, staged_stats = self._stage_files(
+                    df, table, layout
                 )
-                staged_stats = self._pending_stats
                 staged_parts = parts
             try:
                 # O(delta) commit: the manifest records only the added
@@ -2451,12 +2383,11 @@ class VersionedLake(ParquetLake):
                     table,
                     files,
                     [],
-                    parts or None,
+                    layout,
                     mschema or schema,
                     expected,
-                    self._carry_batches(table, batch_id),
+                    self._carry_batches(snap, batch_id),
                     stats=staged_stats, op="append",
-                    dict_columns=dcols or None,
                 )
                 return
             except ConcurrentWriteError as e:
@@ -2471,16 +2402,15 @@ class VersionedLake(ParquetLake):
         the rewrite READ (pinned by ``read``), so an interleaved commit
         makes this one fail instead of silently undoing it — the
         lost-update protection a snapshot swap cannot give."""
-        expected = self._read_version.get(table, self.current_version(table))
-        dcols = self.dict_stats_columns(table)
-        files, schema = self._stage_files(
-            df, table, partition_by, dcols or None
-        )
+        expected = self._read_version.get(table)
+        if expected is None:
+            expected = self.current_version(table)
+        snap = self._snapshot(table, expected)
+        layout = {**snap, "partition_by": partition_by}
+        files, schema, stats = self._stage_files(df, table, layout)
         self._commit(
-            table, files, partition_by, schema, expected,
-            self._carry_batches(table, None),
-            stats=self._pending_stats, op="rewrite",
-            dict_columns=dcols or None,
+            table, files, layout, schema, expected,
+            self._carry_batches(snap, None), stats=stats, op="rewrite",
         )
 
     def compact(
@@ -2493,14 +2423,10 @@ class VersionedLake(ParquetLake):
         before), but the old files stay on disk until ``vacuum`` — a
         reader of any retained version keeps working through the
         rewrite."""
-        v = self.current_version(table)
-        if v is None:
-            raise PipelineRunError(
-                f"lake table {table!r} does not exist under {self.root}"
-            )
-        before = _resolved_count(self.resolve_manifest(table, v))
-        parts = self.partition_columns(table)
         df = self.read(table, merge_schema=True)
+        m = self.resolve_manifest(table, self._read_version[table])
+        before = _resolved_count(m)
+        parts = m.get("partition_by")
         if zorder_by:
             df = _zorder_cluster(df, zorder_by, target_files)
         else:
@@ -2522,19 +2448,20 @@ class VersionedLake(ParquetLake):
         comes from the STAGED paths' hive directories, so value escaping
         is Spark's own.  Same moved-key guard as the base method."""
         ensure_unique_keys(df, keys)
+        expected = self.current_version(table)
+        snap = self._snapshot(table, expected)
         # exactly one partition column, and it must be this one: restaging
         # merged rows partitioned by a single column of a multi-column
         # table would commit files at a different hive depth than the
         # carried-over files, breaking every subsequent basePath read
-        table_parts = self.partition_columns(table)
+        table_parts = list(snap.get("partition_by") or [])
         if table_parts != [partition_col]:
             raise PipelineRunError(
                 f"upsert_partitioned requires a table partitioned by "
                 f"exactly [{partition_col!r}]; {table!r} is partitioned "
                 f"by {table_parts!r}"
             )
-        existing = self.read(table)
-        expected = self._read_version.get(table)
+        existing = self.read(table, version=expected)
         touched_vals = [
             r[0] for r in df.select(partition_col).distinct().collect()
         ]
@@ -2555,11 +2482,7 @@ class VersionedLake(ParquetLake):
             )
         affected = existing.where(in_touched)
         merged = upsert_frames(df, affected, keys, sort=False, check_keys=False)
-        dcols = self.dict_stats_columns(table)
-        new_files, _ = self._stage_files(
-            merged, table, [partition_col], dcols or None
-        )
-        new_stats = self._pending_stats
+        new_files, _, new_stats = self._stage_files(merged, table, snap)
         touched_dirs = {rel.split("/")[1] for rel in new_files}
         m = self.resolve_manifest(table, expected)
         replaced = [
@@ -2572,12 +2495,11 @@ class VersionedLake(ParquetLake):
             table,
             new_files,
             replaced,
-            m.get("partition_by"),
+            snap,
             m["schema"],
             expected,
-            self._carry_batches(table, None),
+            self._carry_batches(snap, None),
             stats=new_stats, op="upsert_partitioned",
-            dict_columns=dcols or None,
         )
         return len(touched_dirs)
 
@@ -2630,6 +2552,7 @@ class VersionedLake(ParquetLake):
             raise PipelineRunError(
                 f"lake table {table!r} does not exist under {self.root}"
             )
+        snap = self._snapshot(table, v)
         m = self.resolve_manifest(table, v)
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         self._validate_predicate_columns(m, schema, predicates, table)
@@ -2674,8 +2597,6 @@ class VersionedLake(ParquetLake):
         )
         if not candidates:
             return 0  # nothing can match: no commit, table unchanged
-        parts = list(m.get("partition_by") or [])
-        dcols = self.dict_stats_columns(table)
         new_files: list[str] = []
         new_stats: dict[str, dict] = {}
         if rewrite:
@@ -2686,21 +2607,19 @@ class VersionedLake(ParquetLake):
                     self._predicate_condition(predicates), F.lit(False)
                 )
             )
-            new_files, _ = self._stage_files(
-                survivors, table, parts or None, dcols or None
+            new_files, _, new_stats = self._stage_files(
+                survivors, table, snap
             )
-            new_stats = self._pending_stats
         self._commit_delta(
             table,
             new_files,
             candidates,
-            parts or None,
+            snap,
             m["schema"],
             v,
-            self._carry_batches(table, None),
+            self._carry_batches(snap, None),
             stats=new_stats,
             op="delete",
-            dict_columns=dcols or None,
         )
         return len(candidates)
 
@@ -2745,6 +2664,7 @@ class VersionedLake(ParquetLake):
             raise PipelineRunError(
                 f"lake table {table!r} does not exist under {self.root}"
             )
+        snap = self._snapshot(table, v)
         m = self.resolve_manifest(table, v)
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         check_same_columns(df, self.spark.createDataFrame([], schema))
@@ -2773,8 +2693,6 @@ class VersionedLake(ParquetLake):
             ]
         )
         candidates, total = self._prune(m, preds)
-        parts = list(m.get("partition_by") or [])
-        dcols = self.dict_stats_columns(table)
         if when_matched is None:
             # insert-only: existing rows are untouched by contract, so
             # stage ONLY the unmatched delta rows as new files — an
@@ -2785,21 +2703,18 @@ class VersionedLake(ParquetLake):
                 keys,
                 "left_anti",
             )
-            new_files, _ = self._stage_files(
-                inserts, table, parts or None, dcols or None
-            )
+            new_files, _, new_stats = self._stage_files(inserts, table, snap)
             self.last_rewrite_files = (0, 0, total)
             self._commit_delta(
                 table,
                 new_files,
                 [],
-                parts or None,
+                snap,
                 m["schema"],
                 v,
-                self._carry_batches(table, None),
-                stats=self._pending_stats,
+                self._carry_batches(snap, None),
+                stats=new_stats,
                 op="merge",
-                dict_columns=dcols or None,
             )
             return 0
         affected = self._read_rels(table, candidates, m["schema"])
@@ -2811,9 +2726,7 @@ class VersionedLake(ParquetLake):
             when_not_matched=when_not_matched,
             check_keys=False,
         )
-        new_files, _ = self._stage_files(
-            merged, table, parts or None, dcols or None
-        )
+        new_files, _, new_stats = self._stage_files(merged, table, snap)
         self.last_rewrite_files = (
             0,
             len(candidates),
@@ -2823,13 +2736,12 @@ class VersionedLake(ParquetLake):
             table,
             new_files,
             candidates,
-            parts or None,
+            snap,
             m["schema"],
             v,
-            self._carry_batches(table, None),
-            stats=self._pending_stats,
+            self._carry_batches(snap, None),
+            stats=new_stats,
             op="merge",
-            dict_columns=dcols or None,
         )
         return len(candidates)
 
@@ -2921,28 +2833,19 @@ class VersionedLake(ParquetLake):
                 f"lake table {table!r} does not exist under {self.root}"
             )
         m = self.resolve_manifest(table, version)
-        target_raw = self._load_manifest(table, version)
-        # the restored state's bloom declaration follows the TARGET
-        # version, not the latest (the files being re-published carry
-        # the target's index blobs)
-        self._pending_bloom_spec = (
-            list(target_raw.get("bloom_columns") or []),
-            target_raw.get("bloom_bits"),
+        # the restored state's declarations follow the TARGET version,
+        # not the latest (the files being re-published carry the
+        # target's layout and index blobs)
+        n = self._commit(
+            table,
+            m["files"],
+            self._snapshot(table, version),
+            m["schema"],
+            current,
+            self._carry_batches(self._snapshot(table, current), None),
+            stats=m.get("stats"),
+            op="restore",
         )
-        try:
-            n = self._commit(
-                table,
-                m["files"],
-                m.get("partition_by") or None,
-                m["schema"],
-                current,
-                self._carry_batches(table, None),
-                stats=m.get("stats"),
-                op="restore",
-                dict_columns=m.get("dict_columns") or None,
-            )
-        finally:
-            self._pending_bloom_spec = None
         if _is_ckpt_rooted(m):
             # the target's stats live (mostly) in its chain-root sidecar,
             # which the full-JSON commit above cannot carry — write the

@@ -42,23 +42,20 @@ def upsert_frames(
     new: DataFrame,
     existing: DataFrame,
     keys: list[str],
-    broadcast_keys: bool = True,
     check_keys: bool = True,
     sort: bool = True,
 ) -> DataFrame:
     """Row-level keyed upsert; see module docstring for the algebra.
 
-    ``broadcast_keys=True`` hints the key-set of ``new`` for the anti-join
-    — correct whenever the delta's distinct keys fit in executor memory
-    (deltas are usually ≪ target).  Set False for delta ≈ target size and
-    let AQE pick a sort-merge join.
+    The key-set of ``new`` is broadcast for the anti-join — correct
+    whenever the delta's distinct keys fit in executor memory (deltas
+    are usually ≪ target).  ``check_keys=False`` skips the duplicate-key
+    validation for callers that already ran it.
     """
     check_same_columns(new, existing)
     if check_keys:
         ensure_unique_keys(new, keys)
-    new_keys = new.select(*keys).dropDuplicates(keys)
-    if broadcast_keys:
-        new_keys = F.broadcast(new_keys)
+    new_keys = F.broadcast(new.select(*keys).dropDuplicates(keys))
     survivors = existing.join(new_keys, on=keys, how="left_anti")
     out = new.unionByName(survivors)
     if sort:

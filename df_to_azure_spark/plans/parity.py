@@ -1219,12 +1219,17 @@ def w18_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             lake.create, customer.repartition(8), "customer",
             bloom_columns=["uid"],
         )
-        absent = _w18_absent_anchor(customer)
+        try:
+            absent = _w18_absent_anchor(customer)
+        except BaseException as anchor_err:
+            # the background create failing is the likelier root cause:
+            # wait it out and raise ITS exception, chained to the anchor's
+            create_err = create_fut.exception()
+            if create_err is not None:
+                raise create_err from anchor_err
+            raise
         create_fut.result()  # table durable before any scan plans against it
     finally:
-        # exception-safe (ADVICE r14): whatever the anchor computation
-        # raises, wait out the background create so its own exception (the
-        # likelier root cause) surfaces instead of being orphaned
         pool.shutdown(wait=True)
     lake.scan("customer", [("or", [[("uid", "=", absent)]])])
     zone_kept, total = lake.last_scan_files

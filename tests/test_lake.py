@@ -94,6 +94,37 @@ def test_upsert_duplicate_keys_raise_before_write(spark, lake):
     assert lake.read("sample").count() == 3  # untouched
 
 
+@pytest.mark.parametrize("versioned", [False, True])
+def test_facade_upsert_validates_keys_once(spark, tmp_path, monkeypatch, versioned):
+    """One facade upsert runs the duplicate-key check exactly once: the
+    lake validates before its merge and the merge algebra does not
+    repeat it.  A duplicate-key delta still raises before any write."""
+    from df_to_azure_spark import checks
+    from df_to_azure_spark.operators import lake as lake_mod
+    from df_to_azure_spark.operators import manifest, upsert
+
+    original = checks.ensure_unique_keys
+    calls = []
+
+    def counting(df, keys):
+        calls.append(keys)
+        original(df, keys)
+
+    for mod in (checks, lake_mod, manifest, upsert):
+        monkeypatch.setattr(mod, "ensure_unique_keys", counting)
+    kw = dict(parquet=True, lake_root=str(tmp_path / "lake"), versioned=versioned)
+    df_to_spark(sample_1(spark), "t", **kw)
+    calls.clear()
+    df_to_spark(sample_2(spark), "t", method="upsert", id_field="col_a", **kw)
+    assert len(calls) == 1
+    dup = spark.createDataFrame([(1, "a", "b"), (1, "c", "d")], ["col_a", "col_b", "col_c"])
+    with pytest.raises(DuplicateKeysError):
+        df_to_spark(dup, "t", method="upsert", id_field="col_a", **kw)
+    lake_cls = manifest.VersionedLake if versioned else ParquetLake
+    back = lake_cls(spark, kw["lake_root"]).read("t")
+    assert sorted(r.col_a for r in back.collect()) == [1, 3, 4, 5, 6]
+
+
 def test_upsert_column_mismatch_raises(spark, lake):
     lake.write(sample_1(spark), "sample", method="create")
     extra = sample_2(spark).withColumnRenamed("col_c", "col_x")

@@ -380,12 +380,13 @@ def test_vacuum_age_gate_spares_inflight_staged_commit(spark, lake):
     alone; the in-flight commit then succeeds and reads back whole."""
     lake.create(_df(spark, [(1, "a")]), "t")
     # writer in flight: files staged under files/, manifest not committed
-    files, schema = lake._stage_files(_df(spark, [(2, "b")]), "t", None)
+    snap = lake._snapshot("t", 1)
+    files, schema, _ = lake._stage_files(_df(spark, [(2, "b")]), "t", snap)
     removed = lake.vacuum("t", keep_last=1)  # default older_than_ms
     assert not any(r.startswith("files/") for r in removed)
     # the racing writer's commit succeeds and the table is intact
     prior = lake._load_manifest("t", 1)["files"]
-    lake._commit("t", sorted(set(prior) | set(files)), None, schema, 1, [])
+    lake._commit("t", sorted(set(prior) | set(files)), snap, schema, 1, [])
     got = {(r.id, r.v) for r in lake.read("t").collect()}
     assert got == {(1, "a"), (2, "b")}
     # quiesced maintenance: the ungated sweep still reaps dead artifacts
@@ -435,7 +436,7 @@ def test_conditional_put_override_carries_occ_contract(spark, tmp_path):
     # a commit racing for an already-claimed version loses loudly
     with pytest.raises(ConcurrentWriteError):
         lake._commit(
-            "t", [], None, _df(spark, []).schema.json(), 1, []
+            "t", [], {}, _df(spark, []).schema.json(), 1, []
         )
     assert {r.id for r in lake.read("t").collect()} == {1, 2}
 
@@ -592,65 +593,49 @@ def test_restore_sidecar_failure_degrades_not_raises(spark, lake, monkeypatch):
     assert {r.id for r in lake.scan("t", [("id", "=", 100)]).collect()} == {100}
 
 
-def test_json_mode_checkpoint_rematerializes_sidecar_stats(spark, tmp_path):
-    """Round-13 advisor: reopening a parquet-checkpoint table in legacy
-    checkpoint_format='json' must re-materialize the sidecar's per-file
-    stats into the full JSON manifest — otherwise the format switch
-    silently drops zone maps (and hive partition values) for the bulk
-    of the table."""
-    root = str(tmp_path / "lake")
-    pq_lake = VersionedLake(spark, root, checkpoint_interval=2)
-    df = spark.createDataFrame(
-        [(i, "FR" if i % 2 else "a b/c=d", float(i)) for i in range(16)],
-        "id bigint, country string, x double",
-    )
-    pq_lake.create(
-        df.repartitionByRange(4, "id").sortWithinPartitions("id"),
-        "t",
-        partition_by=["country"],
-    )
-    pq_lake.append(
-        spark.createDataFrame(
-            [(100, "DE", 1.0)], "id bigint, country string, x double"
-        ),
-        "t",
-    )
-    assert "ckpt_table" in pq_lake.resolve_manifest("t", 2)
+def test_full_json_checkpoint_from_older_writers_still_resolves(
+    spark, tmp_path
+):
+    """Older releases could checkpoint as one FULL JSON manifest (all
+    live files plus their stats) instead of a parquet sidecar.  Such a
+    table must still read: resolution roots at the full manifest, and a
+    new writer chains its deltas off it."""
+    import json
 
-    js_lake = VersionedLake(
-        spark, root, checkpoint_interval=2, checkpoint_format="json"
+    root = str(tmp_path / "lake")
+    lake = VersionedLake(spark, root, checkpoint_interval=20)
+    lake.create(
+        _df(spark, [(i, f"v{i}") for i in range(8)]).repartitionByRange(
+            4, "id"
+        ),
+        "t",
     )
-    js_lake.append(
-        spark.createDataFrame(
-            [(101, "DE", 2.0)], "id bigint, country string, x double"
-        ),
-        "t",
-    )  # v3: delta off the sidecar root
-    js_lake.append(
-        spark.createDataFrame(
-            [(102, "DE", 3.0)], "id bigint, country string, x double"
-        ),
-        "t",
-    )  # v4: json-mode full checkpoint — the re-materialization path
-    raw = js_lake._load_manifest("t", 4)
-    assert "files" in raw
-    # every live file carries stats again, including the sidecar bulk
-    assert set(raw["stats"]) == set(raw["files"])
-    # hive partition values round-tripped (quote∘unquote exact): a scan
-    # on the escaped partition value and on the zone-mapped id column
-    # both stay ≡ read().where() and still skip files
-    got = {
-        r.id
-        for r in js_lake.scan("t", [("country", "=", "a b/c=d")]).collect()
+    lake.append(_df(spark, [(100, "x")]), "t")  # v2: O(delta)
+    m = lake.resolve_manifest("t", 2)
+    # v3 as the old writers laid it out: a full manifest, no sidecar
+    doc = {
+        "version": 3,
+        "op": "append",
+        "files": m["files"],
+        "partition_by": [],
+        "dict_columns": [],
+        "schema": m["schema"],
+        "batch_ids": [],
+        "committed_ms": 0,
+        "stats": m["stats"],
     }
-    want = {
-        r.id
-        for r in js_lake.read("t").where("country = 'a b/c=d'").collect()
+    lake._write_small(lake._manifest_path("t", 3), json.dumps(doc))
+    fresh = VersionedLake(spark, root, checkpoint_interval=20)
+    fresh.append(_df(spark, [(101, "y")]), "t")  # v4: delta off v3
+    assert "base" in fresh._load_manifest("t", 4)
+    assert fresh._chain_root("t", 4) == 3
+    assert {r.id for r in fresh.read("t").collect()} == set(range(8)) | {
+        100,
+        101,
     }
-    assert got == want and got
-    assert js_lake.last_scan_files[0] < js_lake.last_scan_files[1]
-    js_lake.scan("t", [("id", "<", 4)])
-    assert js_lake.last_scan_files[0] < js_lake.last_scan_files[1]
+    got = {r.id for r in fresh.scan("t", [("id", "<", 2)]).collect()}
+    assert got == {0, 1}
+    assert fresh.last_scan_files[0] < fresh.last_scan_files[1]
 
 
 def test_scan_unknown_column_raises_consistently(spark, lake):
@@ -971,8 +956,8 @@ def test_bloom_index_point_lookup_prunes_where_zone_maps_cannot(spark, lake):
 def test_bloom_index_survives_append_checkpoint_and_restore(spark, tmp_path):
     """The declaration is table-level: appends honor it, the blobs ride
     into the columnar checkpoint sidecar as binary columns (probes keep
-    working on a sidecar-rooted chain), restore carries the
-    declaration, and the json-mode bridge round-trips the blobs."""
+    working on a sidecar-rooted chain), and restore carries the
+    declaration."""
     root = str(tmp_path / "lake")
     lake = VersionedLake(spark, root, checkpoint_interval=2)
     d1 = spark.range(0, 5_000).selectExpr(
@@ -1000,25 +985,10 @@ def test_bloom_index_survives_append_checkpoint_and_restore(spark, tmp_path):
     assert cold.last_scan_files[0] <= 2
     assert cold.bloom_stats_columns("t") == ["uid"]
     # restore carries the declaration
-    n = cold.restore("t", 2)
+    cold.restore("t", 2)
     assert cold.bloom_stats_columns("t") == ["uid"]
     cold.scan("t", [("uid", "=", 999_999_999)])
     assert cold.last_scan_files[0] <= 2
-    # json-mode bridge: the re-materialized full manifest keeps blobs
-    js = VersionedLake(
-        spark, root, checkpoint_interval=1, checkpoint_format="json"
-    )
-    js.append(
-        spark.range(10_000, 10_100).selectExpr(
-            "id * 2654435761 % 1000003 AS uid", "id AS payload"
-        ),
-        "t",
-    )
-    raw = js._load_manifest("t", n + 1)
-    assert "files" in raw
-    assert any("bf" in st for st in raw["stats"].values())
-    js.scan("t", [("uid", "=", 999_999_999)])
-    assert js.last_scan_files[0] <= 3
 
 
 def test_bloom_probe_type_and_evolution_guards(spark, lake):
@@ -1070,8 +1040,10 @@ def test_bloom_probe_type_and_evolution_guards(spark, lake):
     assert len(kept2) <= 1  # matching tag: absent key pruned
 
 
-def test_spark_planned_scan_equals_driver_planned(spark, tmp_path):
-    """Round-14 (verdict gap #3): at/above spark_prune_threshold rows
+def test_spark_planned_scan_equals_driver_planned(
+    spark, tmp_path, monkeypatch
+):
+    """Round-14 (verdict gap #3): at/above _SPARK_PRUNE_THRESHOLD rows
     the sidecar root stays LAZY (footer metadata only) and scan()
     planning runs the SAME Arrow mask inside a distributed mapInArrow
     job — the driver never loads the checkpoint.  Equivalence is pinned
@@ -1080,10 +1052,13 @@ def test_spark_planned_scan_equals_driver_planned(spark, tmp_path):
     lazy keys."""
     import datetime as dt
 
+    from df_to_azure_spark.operators import manifest
+
+    driver_threshold = manifest._SPARK_PRUNE_THRESHOLD
     root = str(tmp_path / "lake")
-    big = VersionedLake(
-        spark, root, checkpoint_interval=2, spark_prune_threshold=0
-    )
+    # threshold 0: every sidecar this lake resolves stays lazy
+    monkeypatch.setattr(manifest, "_SPARK_PRUNE_THRESHOLD", 0)
+    big = VersionedLake(spark, root, checkpoint_interval=2)
     df = spark.createDataFrame(
         [
             (
@@ -1110,6 +1085,8 @@ def test_spark_planned_scan_equals_driver_planned(spark, tmp_path):
     )  # v2: sidecar root
     m = big.resolve_manifest("t", 2)
     assert "ckpt_path" in m and "ckpt_table" not in m  # still lazy
+    # big keeps its memoized lazy view; drv resolves on the driver path
+    monkeypatch.setattr(manifest, "_SPARK_PRUNE_THRESHOLD", driver_threshold)
     drv = VersionedLake(spark, root, checkpoint_interval=2)  # driver path
     trees = [
         [("id", "between", (100, 150))],
@@ -1138,8 +1115,7 @@ def test_spark_planned_scan_equals_driver_planned(spark, tmp_path):
     ]
     # a delete through the lazy chain stays correct (materializes only
     # the candidate stats)
-    big2 = VersionedLake(
-        spark, root, checkpoint_interval=2, spark_prune_threshold=0
-    )
+    monkeypatch.setattr(manifest, "_SPARK_PRUNE_THRESHOLD", 0)
+    big2 = VersionedLake(spark, root, checkpoint_interval=2)
     big2.delete_where("t", [("id", "between", (0, 99))])
     assert big2.read("t").count() == 301

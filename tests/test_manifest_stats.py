@@ -638,12 +638,12 @@ def test_long_delta_chains_resolve_without_recursion(spark, lake, tmp_path):
 
     deep = VersionedLake(spark, str(tmp_path / "deep"), checkpoint_interval=5000)
     schema = '{"type":"struct","fields":[]}'
-    deep._commit("t", ["files/f0"], None, schema, None, [])
+    deep._commit("t", ["files/f0"], {}, schema, None, [])
     # one REAL delta through the committer gives the exact wire format;
     # the other 1099 links stamp that template with plain file IO — the
     # regression under test is RESOLUTION recursion depth, and driving
     # 1100 separate py4j FS commits took ~250 s for no extra coverage
-    deep._commit_delta("t", ["files/f1"], [], None, schema, 1, [])
+    deep._commit_delta("t", ["files/f1"], [], {}, schema, 1, [])
     import json as _json
 
     mdir = tmp_path / "deep" / "t" / "_manifests"

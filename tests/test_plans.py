@@ -190,19 +190,55 @@ def test_upsert_anti_join_carries_keys_only(spark, sf_smoke):
     assert "BroadcastHashJoin" in plan
 
 
-def test_no_accidental_cartesian_products():
+def test_no_accidental_cartesian_products(request):
     """The whole-registry cartesian lint LIVES INSIDE
     tests/test_entry.py::test_all_queries_execute_smoke (every
     oracle-bearing query's plan is asserted CartesianProduct-free there,
     same allowed-set): constructing all 367 entries executes their eager
     lake builds, and doing that twice — once to count, once to explain —
-    cost ~240 s of pure duplication.  This stub documents the fusion so
-    the lint can't silently vanish from the suite."""
+    cost ~240 s of pure duplication.  This stub fails when that test is
+    not part of the session, so the lint can't silently vanish."""
     from tests.test_entry import CARTESIAN_ALLOWED
 
+    assert any(
+        item.path.name == "test_entry.py"
+        and item.name == "test_all_queries_execute_smoke"
+        for item in request.session.items
+    ), (
+        "the cartesian lint runs inside "
+        "tests/test_entry.py::test_all_queries_execute_smoke, which this "
+        "session did not collect"
+    )
     assert CARTESIAN_ALLOWED == {
         "knn_topk", "embedding_neardup_pairs", "lsh_knn"
     }
+
+
+def test_w18_surfaces_background_create_error(spark, monkeypatch):
+    """When both the anchor computation and the background create fail,
+    the create's exception (the likelier root cause) is the one raised,
+    chained to the anchor's."""
+    from df_to_azure_spark.operators.manifest import VersionedLake
+    from df_to_azure_spark.plans import parity
+
+    def anchor_fails(customer):
+        raise RuntimeError("anchor failed")
+
+    def create_fails(self, *args, **kwargs):
+        raise ValueError("create failed")
+
+    monkeypatch.setattr(
+        parity,
+        "load_table",
+        lambda spark, sf_dir, name: spark.range(3).withColumnRenamed(
+            "id", "c_custkey"
+        ),
+    )
+    monkeypatch.setattr(parity, "_w18_absent_anchor", anchor_fails)
+    monkeypatch.setattr(VersionedLake, "create", create_fails)
+    with pytest.raises(ValueError, match="create failed") as exc:
+        parity.w18_bloom_probe(spark, "w18_error_probe")
+    assert isinstance(exc.value.__cause__, RuntimeError)
 
 
 def test_events_hourly_partial_aggregation(spark, sf_smoke):

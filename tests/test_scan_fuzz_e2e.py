@@ -152,18 +152,21 @@ def _canon(rows):
 @pytest.mark.parametrize(
     "layout", ["sorted", "unsorted", "ckpt", "ckpt-spark", "hive"]
 )
-def test_scan_equals_read_where_fuzz(spark, tmp_path, layout):
+def test_scan_equals_read_where_fuzz(spark, tmp_path, layout, monkeypatch):
     # crc32, not hash(): str hashes are salted per process, which
     # would make every run fuzz a different (irreproducible) seed
     rng = random.Random(zlib.crc32(layout.encode()) & 0xFFFF)
-    # ckpt-spark: same chain shape as ckpt, but spark_prune_threshold=0
+    # ckpt-spark: same chain shape as ckpt, but a prune threshold of 0
     # forces the DISTRIBUTED planner (lazy sidecar + mapInArrow mask)
     # over the whole hostile predicate space
+    if layout == "ckpt-spark":
+        from df_to_azure_spark.operators import manifest
+
+        monkeypatch.setattr(manifest, "_SPARK_PRUNE_THRESHOLD", 0)
     lake = VersionedLake(
         spark,
         str(tmp_path / f"fz_{layout}"),
         checkpoint_interval=2 if layout.startswith("ckpt") else 20,
-        spark_prune_threshold=0 if layout == "ckpt-spark" else 4_000_000,
     )
     df = spark.createDataFrame(_rand_rows(rng, 120), COLS)
     if layout == "sorted":

@@ -208,11 +208,15 @@ def test_planner_memo_is_bounded(spark, lake):
         LakeCdcStreamReader,
     )
 
-    lake.checkpoint_interval = 2  # json-mode full manifests need resolves
-    lake.checkpoint_format = "json"
+    # full manifests need resolves of v-1: every other commit is an
+    # upsert, whose full rewrite commits a full manifest (v3, v5, v7)
     lake.create(_df(spark, 0, 10), "t")
     for i in range(1, 7):
-        lake.append(_df(spark, 10 * i, 10 * i + 10), "t")
+        delta = _df(spark, 10 * i, 10 * i + 10)
+        if i % 2:
+            lake.append(delta, "t")
+        else:
+            lake.upsert(delta, "t", ["id"])
     src = LakeCdcDataSource(
         options={"root": lake.root, "table": "t", "starting_version": "0"}
     )
