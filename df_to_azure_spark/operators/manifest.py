@@ -73,7 +73,7 @@ import time
 import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -117,7 +117,8 @@ _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 # per-file bloom filter indexes (Delta's bloom-filter index design):
 # declared at create via bloom_columns=, built from ONE distributed
-# aggregation over the staged files (the _file_stats pattern), stored
+# aggregation over the staged part-files (read by explicit path, sized
+# from the row counts the zone maps already carry), stored
 # as a base85 string in the per-file stats ("bf") and as a binary
 # column in the checkpoint sidecar.  The point-lookup lever zone maps
 # cannot give: an unclustered high-cardinality id probe opens only the
@@ -378,6 +379,107 @@ def _encode_stat(value, dtype, bound: str | None = None):
             return _NO_STAT
         return value.isoformat(sep=" ", timespec="microseconds")
     return _NO_STAT
+
+
+def _footer_value(raw, dtype):
+    """One row-group bound from a Parquet footer as the Python value
+    ``collect()`` returns for ``dtype``, or ``_NO_STAT`` when the
+    physical encoding is not one this decoder knows.  Decimals come
+    from the raw unscaled INT32/INT64 integer (the legacy fixed-length
+    layout falls back); dates and timestamps (the caller has checked
+    the column is INT64 micros) go through ``dtype.fromInternal`` —
+    the very conversion ``collect()`` applies, so aware timestamps
+    render in the same local wall clock."""
+    import decimal as _dec
+
+    if isinstance(dtype, T.DecimalType):
+        if not isinstance(raw, int):
+            return _NO_STAT
+        return _dec.Decimal(raw).scaleb(-dtype.scale)
+    if isinstance(dtype, T.StringType):
+        try:
+            return raw.decode("utf-8")
+        except UnicodeDecodeError:
+            return _NO_STAT
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+        return dtype.fromInternal(raw)
+    return raw
+
+
+def _footer_zone_map(path: str, eligible: list) -> dict | None:
+    """Zone map of one local part file from its Parquet footer — the
+    entry the aggregation in ``VersionedLake._file_stats`` builds, with
+    no Spark job: ``rows`` is the footer row count; per column ``mn`` /
+    ``mx`` are the min and max over row groups (Spark's order: NaN
+    above every number) and ``nl`` the sum of their null counts.
+    ``None`` when the footer cannot serve some eligible column: a row
+    group without a null count, or without min/max while holding
+    non-null values (INT96 timestamps; strings whose min+max exceed
+    parquet-java's 4 KiB statistics limit)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    if md.num_rows == 0:
+        return {"rows": 0, "cols": {}}
+    index = {}
+    for j in range(md.num_columns):
+        c = md.schema.column(j)
+        if c.path == c.name:  # top-level leaf
+            index[c.name] = j
+
+    def _key(v):
+        return (v != v, v)  # NaN sorts last, as in Spark
+
+    cols: dict[str, dict] = {}
+    for f in eligible:
+        j = index.get(f.name)
+        if j is None:
+            return None
+        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
+            column = md.schema.column(j)
+            unit = json.loads(column.logical_type.to_json()).get("timeUnit")
+            if column.physical_type != "INT64" or unit != "microseconds":
+                return None  # INT96 / millis: the aggregate decodes them
+        mn = mx = None
+        nl = 0
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(j).statistics
+            if st is None or not st.has_null_count:
+                return None
+            nl += st.null_count
+            if not st.has_min_max:
+                if st.null_count != rg.num_rows:
+                    return None
+                continue
+            lo = _footer_value(st.min_raw, f.dataType)
+            hi = _footer_value(st.max_raw, f.dataType)
+            if lo is _NO_STAT or hi is _NO_STAT:
+                return None
+            if mn is None or _key(lo) < _key(mn):
+                mn = lo
+            if mx is None or _key(hi) > _key(mx):
+                mx = hi
+        mn = _encode_stat(mn, f.dataType, bound="min")
+        mx = _encode_stat(mx, f.dataType, bound="max")
+        if mn is _NO_STAT or mx is _NO_STAT:
+            continue
+        cols[f.name] = {"mn": mn, "mx": mx, "nl": nl}
+    return {"rows": md.num_rows, "cols": cols}
+
+
+def _columns_within(schema_json: str, base_json: str) -> bool:
+    """True when every column of ``schema_json`` is in ``base_json``
+    with the same type: files written with it hold nothing a read
+    pinned to ``base_json`` would drop or mistype."""
+    base = {
+        f.name: f.dataType
+        for f in T.StructType.fromJson(json.loads(base_json)).fields
+    }
+    return all(
+        base.get(f.name) == f.dataType
+        for f in T.StructType.fromJson(json.loads(schema_json)).fields
+    )
 
 
 def _is_ckpt_rooted(m: dict) -> bool:
@@ -857,7 +959,8 @@ class VersionedLake(ParquetLake):
         """Plan over the file list of one manifest version (latest by
         default; pass ``version`` to time-travel).  The scan needs no
         directory listing, and the referenced files are immutable, so a
-        concurrent commit can never tear it."""
+        concurrent commit can never tear it.  The schema comes from
+        :meth:`_reader`."""
         v = self.current_version(table) if version is None else version
         if v is None:
             raise PipelineRunError(
@@ -867,13 +970,28 @@ class VersionedLake(ParquetLake):
         if version is None:
             self._read_version[table] = v
         paths = [f"{self.table_dir(table)}/{rel}" for rel in m["files"]]
+        schema = T.StructType.fromJson(json.loads(m["schema"]))
         if not paths:
-            schema = T.StructType.fromJson(json.loads(m["schema"]))
             return self.spark.createDataFrame([], schema)
+        return self._reader(table, v, merge_schema).parquet(*paths)
+
+    def _reader(
+        self, table: str, version: int, merge_schema: bool = False
+    ) -> DataFrameReader:
+        """The Parquet reader over files of ``version``.  While every
+        file holds exactly the manifest's columns (``uniform_schema``)
+        it takes the manifest's schema, so planning opens no footer.
+        Otherwise — and always under ``merge_schema=True`` — it merges
+        the files' schemas: columns an append added read as NULL for
+        older files, and a rewrite restages them instead of dropping
+        them."""
+        snap = self._snapshot(table, version)
         reader = self.spark.read.option("basePath", self.files_dir(table))
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        if merge_schema or not snap.get("uniform_schema"):
+            return reader.option("mergeSchema", "true")
+        return reader.schema(
+            T.StructType.fromJson(json.loads(snap["schema"]))
+        )
 
     # -- stats-pruned reads ---------------------------------------------
     @staticmethod
@@ -1488,12 +1606,7 @@ class VersionedLake(ParquetLake):
             # empty frame)
             return self.spark.createDataFrame([], schema)
         else:
-            reader = self.spark.read.option(
-                "basePath", self.files_dir(table)
-            )
-            if merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            df = reader.parquet(
+            df = self._reader(table, v, merge_schema).parquet(
                 *[f"{self.table_dir(table)}/{rel}" for rel in kept]
             )
             # deterministic layout: a hive-partitioned parquet read
@@ -1502,7 +1615,7 @@ class VersionedLake(ParquetLake):
             # this select the same query would change column order
             # depending on whether pruning eliminated every file,
             # breaking positional consumers (unionAll).  Evolved extra
-            # columns (merge_schema) follow in their read order.
+            # columns (merged schemas) follow in their read order.
             names = [f.name for f in schema.fields if f.name in set(df.columns)]
             extras = [c for c in df.columns if c not in set(names)]
             df = df.select(*[F.col(f"`{c}`") for c in names + extras])
@@ -1627,29 +1740,50 @@ class VersionedLake(ParquetLake):
         return cond
 
     # -- staging + commit ----------------------------------------------
+    def _read_staged(
+        self, stage: str, staged: dict, schema: T.StructType
+    ) -> DataFrame:
+        """The staged part-files, read by explicit path with the frame's
+        own schema: no schema-inference job, and no listing of the
+        hidden ``.stage-`` directory (which Spark warns about as an
+        ignored path on every commit)."""
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", stage)
+            .parquet(*[p.toString() for p in staged.values()])
+        )
+
     def _file_stats(
-        self, stage: str, cid: str, schema: T.StructType,
-        partition_by: list[str] | None,
+        self, stage: str, cid: str, staged: dict,
+        schema: T.StructType, partition_by: list[str] | None,
         dict_columns: list[str] | None = None,
     ) -> dict[str, dict] | None:
-        """Per-file zone maps for the staged part-files: ONE distributed
-        aggregation over the data just written (page-cache warm), giving
-        min/max/null-count per (file, column) for the first
-        ``_STATS_MAX_COLS`` stats-eligible NON-partition columns —
-        declared ``dict_columns`` first, so opting in never pushes a
-        dictionary column past the cap.  For dict columns the same pass
-        also collects the file's distinct-value set, capped at
-        ``_DICT_CAP + 1`` values (one over the cap proves overflow, so
-        an overflowing file simply carries no ``vals`` — the declaration
-        is a hint, never a correctness obligation).  Keys are
-        stage-relative paths; the rename loop remaps them to the
-        committed ``files/...`` names.  The collect is one row per
-        staged file — bounded by the commit's file count, never by data.
-        Partition columns need no zone maps: their per-file value is the
-        hive path itself, recorded separately in ``part``.  Returns
-        ``None`` (not ``{}``) when no column is stats-eligible, so the
-        caller can tell "stats ran, this file had zero rows" apart from
-        "stats never ran"."""
+        """Per-file zone maps for the staged part-files ``staged``
+        (stage-relative path → Hadoop path): min/max/null-count per
+        (file, column) for the first ``_STATS_MAX_COLS`` stats-eligible
+        NON-partition columns — declared ``dict_columns`` first, so
+        opting in never pushes a dictionary column past the cap.
+
+        On a local (``file:``) stage each entry comes from the file's
+        Parquet footer (:func:`_footer_zone_map`): O(files) metadata
+        reads and no Spark job.  Footers cannot serve declared dict columns
+        (those need value sets), a footer without statistics for some
+        eligible column (INT96 timestamps, strings over parquet-java's
+        4 KiB limit) or a non-local stage; there ONE distributed
+        aggregation over the staged files (page-cache warm) computes
+        the same entries.  For dict columns that pass also collects the
+        file's distinct-value set, capped at ``_DICT_CAP + 1`` values
+        (one over the cap proves overflow, so an overflowing file
+        simply carries no ``vals`` — the declaration is a hint, never a
+        correctness obligation); its collect is one row per staged file
+        — bounded by the commit's file count, never by data.
+
+        Keys are stage-relative paths; the rename loop remaps them to
+        the committed ``files/...`` names.  Partition columns need no
+        zone maps: their per-file value is the hive path itself,
+        recorded separately in ``part``.  Returns ``None`` (not ``{}``)
+        when no column is stats-eligible, so the caller can tell "stats
+        ran, this file had zero rows" apart from "stats never ran"."""
         parts = set(partition_by or [])
         dcols = [c for c in (dict_columns or []) if c not in parts]
         by_name = {f.name: f for f in schema.fields}
@@ -1670,7 +1804,19 @@ class VersionedLake(ParquetLake):
         dict_fields = [f for f in dict_fields if f in eligible]
         if not eligible:
             return None
-        df = self.spark.read.option("basePath", stage).parquet(stage)
+        if not staged:
+            return {}
+        local = next(iter(staged.values())).toUri().getScheme() == "file"
+        if local and not dict_fields:
+            out: dict[str, dict] = {}
+            for key, path in staged.items():
+                zm = _footer_zone_map(path.toUri().getPath(), eligible)
+                if zm is None:
+                    break
+                out[key] = zm
+            else:
+                return out
+        df = self._read_staged(stage, staged, schema)
         aggs = [F.count(F.lit(1)).alias("__rows")]
         for f in eligible:
             c = F.col(f"`{f.name}`")
@@ -1691,7 +1837,7 @@ class VersionedLake(ParquetLake):
             df.groupBy(F.input_file_name().alias("__f")).agg(*aggs).collect()
         )
         marker = f"/.stage-{cid}/"
-        out: dict[str, dict] = {}
+        out = {}
         for r in rows:
             uri = r["__f"]
             if marker not in uri:
@@ -1733,26 +1879,26 @@ class VersionedLake(ParquetLake):
         self,
         stage: str,
         cid: str,
+        staged: dict,
         schema: T.StructType,
         partition_by: list[str] | None,
         bloom_columns: list[str],
         bloom_bits: int | None,
-        raw_stats: dict[str, dict] | None,
-        max_rows: int | None = None,
+        raw_stats: dict[str, dict],
     ) -> dict[str, dict]:
         """Per-file bloom filters for the staged part-files: ONE
-        distributed aggregation (the ``_file_stats`` pattern, page-cache
-        warm).  Per row and declared column, k double-hashed positions
-        (JVM-side xxhash64 arithmetic, NULLs excluded — extra bits only
-        ever add false positives, never misses); a word-level ``bit_or``
-        with map-side partial aggregation means the shuffle carries at
-        most ``files × columns × m/64`` words no matter the row count.
-        Sized from the commit's largest staged file at ~10 bits/row
-        (k=7 → ~1% FPR), clamped to [1 KiB, 1 MiB] per file per column
-        unless ``bloom_bits`` pins it.  Returns base85 blob strings
-        keyed like ``_file_stats`` (stage-relative path → column)."""
+        distributed aggregation over them (page-cache warm).  Per row
+        and declared column, k double-hashed positions (JVM-side
+        xxhash64 arithmetic, NULLs excluded — extra bits only ever add
+        false positives, never misses); a word-level ``bit_or`` with
+        map-side partial aggregation means the shuffle carries at most
+        ``files × columns × m/64`` words no matter the row count.
+        Sized from the largest staged file's row count in ``raw_stats``
+        at ~10 bits/row (k=7 → ~1% FPR), clamped to [1 KiB, 1 MiB] per
+        file per column unless ``bloom_bits`` pins it.  Returns base85
+        blob strings keyed like ``_file_stats`` (stage-relative path →
+        column)."""
         import base64
-        import struct
 
         import numpy as np
 
@@ -1765,22 +1911,20 @@ class VersionedLake(ParquetLake):
             and c not in parts
             and isinstance(by_name[c].dataType, _BLOOM_TYPES)
         ]
-        if not fields:
+        if not fields or not staged:
             return {}
         if bloom_bits:
             m = max(64, (int(bloom_bits) + 63) // 64 * 64)
         else:
-            if max_rows is None:
-                max_rows = max(
-                    [st.get("rows") or 0 for st in (raw_stats or {}).values()]
-                    or [0]
-                )
+            max_rows = max(
+                [st.get("rows") or 0 for st in raw_stats.values()] or [0]
+            )
             m = _BLOOM_MIN_BITS
             target = max(1, max_rows) * _BLOOM_BITS_PER_ROW
             while m < target and m < _BLOOM_MAX_BITS:
                 m <<= 1
         k = _BLOOM_K
-        df = self.spark.read.option("basePath", stage).parquet(stage)
+        df = self._read_staged(stage, staged, schema)
         unioned = None
         for ci, f in enumerate(fields):
             c = F.col(f"`{f.name}`")
@@ -1838,36 +1982,6 @@ class VersionedLake(ParquetLake):
             )
         return out
 
-    @staticmethod
-    def _staged_max_rows(stage: str) -> int | None:
-        """Max row count over the staged part-files, read from the local
-        parquet FOOTERS — O(files) driver metadata reads, no Spark job.
-        Exactly the number ``_file_stats`` would report per file (both
-        count physical rows), so bloom sizing is unchanged; returns
-        ``None`` when the stage is not a local directory (non-local
-        filesystems fall back to the sequential stats-then-bloom path)."""
-        import os
-
-        path = stage[len("file:"):] if stage.startswith("file:") else stage
-        if not os.path.isdir(path):
-            return None
-        try:
-            import pyarrow.parquet as pq
-
-            mx = 0
-            for dirpath, _dirs, names in os.walk(path):
-                for name in names:
-                    if name.startswith("part-") and name.endswith(".parquet"):
-                        mx = max(
-                            mx,
-                            pq.ParquetFile(
-                                os.path.join(dirpath, name)
-                            ).metadata.num_rows,
-                        )
-            return mx
-        except Exception:
-            return None
-
     def _stage_files(
         self, df: DataFrame, table: str, snap: dict
     ) -> tuple[list[str], str, dict[str, dict]]:
@@ -1889,51 +2003,9 @@ class VersionedLake(ParquetLake):
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(stage)
-        footer_max = (
-            self._staged_max_rows(stage) if bcols and not bbits else None
-        )
-        if bcols and (bbits or footer_max is not None):
-            # stats and bloom are independent full-scan aggregations over
-            # the just-written stage; the bloom's only stats dependency
-            # was its SIZE (max rows per staged file), which the local
-            # parquet FOOTERS give for free — so the two jobs overlap
-            # from a 2-thread pool (guide §2.6) instead of running
-            # serially.  A literal single-pass fuse is the wrong shape:
-            # the bloom's word-level bit_or keeps its map-side partial
-            # aggregation only under its own (file, col, word) grouping.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                stats_fut = pool.submit(
-                    self._file_stats, stage, cid, df.schema, partition_by,
-                    dict_columns,
-                )
-                blooms_fut = pool.submit(
-                    self._file_blooms, stage, cid, df.schema, partition_by,
-                    bcols, bbits, None, footer_max,
-                )
-                raw_stats = stats_fut.result()
-                raw_blooms = blooms_fut.result()
-            if raw_stats is None:
-                raw_blooms = {}
-        else:
-            raw_stats = self._file_stats(
-                stage, cid, df.schema, partition_by, dict_columns
-            )
-            raw_blooms = (
-                self._file_blooms(
-                    stage, cid, df.schema, partition_by, bcols, bbits,
-                    raw_stats,
-                )
-                if bcols and raw_stats is not None
-                else {}
-            )
         fs, stage_path, jvm = self._fs(stage)
-        files_base = self.files_dir(table)
-        rels: list[str] = []
-        staged_stats: dict[str, dict] = {}
-        consumed: set[str] = set()
-        fallback: list[str] = []
+        # stage-relative path → Hadoop path of every staged part-file
+        staged: dict = {}
 
         def _walk(path, rel_prefix: str) -> None:
             for st in fs.listStatus(path):
@@ -1941,49 +2013,65 @@ class VersionedLake(ParquetLake):
                 if st.isDirectory():
                     _walk(st.getPath(), f"{rel_prefix}{name}/")
                 elif name.startswith("part-"):
-                    rel = f"{rel_prefix}{cid}-{name}"
-                    target = jvm.org.apache.hadoop.fs.Path(
-                        f"{files_base}/{rel}"
-                    )
-                    fs.mkdirs(target.getParent())
-                    if not fs.rename(st.getPath(), target):
-                        raise PipelineRunError(
-                            f"staging rename failed for table {table!r}"
-                        )
-                    rels.append(f"files/{rel}")
-                    if raw_stats is not None:
-                        # key by the RAW on-disk path: _file_stats keys
-                        # are the URI unquoted exactly once, which IS
-                        # the on-disk (hive-escaped) name — unquoting
-                        # again here would double-decode escaped
-                        # partition values (e.g. 'a%3Ab' → 'a:b') and
-                        # mis-file every such file as rows:0.
-                        raw_key = f"{rel_prefix}{name}"
-                        s = raw_stats.get(raw_key)
-                        if s is None:
-                            # absent from the aggregation: either a
-                            # genuinely zero-row part file, or the
-                            # URI-decoding assumption above broke —
-                            # reconciled after the walk (a rows:0
-                            # entry is PRUNE-ALWAYS, so a mis-keyed
-                            # live file must not get one)
-                            s = {"rows": 0, "cols": {}}
-                            fallback.append(f"files/{rel}")
-                        else:
-                            consumed.add(raw_key)
-                        bf = raw_blooms.get(raw_key)
-                        if bf:
-                            s = dict(s)
-                            s["bf"] = bf
-                        if rel_prefix:
-                            s = dict(s)
-                            s["part"] = dict(
-                                seg.split("=", 1)
-                                for seg in rel_prefix.rstrip("/").split("/")
-                            )
-                        staged_stats[f"files/{rel}"] = s
+                    staged[f"{rel_prefix}{name}"] = st.getPath()
 
         _walk(stage_path, "")
+        raw_stats = self._file_stats(
+            stage, cid, staged, df.schema, partition_by, dict_columns
+        )
+        raw_blooms = (
+            self._file_blooms(
+                stage, cid, staged, df.schema, partition_by, bcols, bbits,
+                raw_stats,
+            )
+            if bcols and raw_stats is not None
+            else {}
+        )
+        files_base = self.files_dir(table)
+        rels: list[str] = []
+        staged_stats: dict[str, dict] = {}
+        consumed: set[str] = set()
+        fallback: list[str] = []
+        for raw_key, src in staged.items():
+            cut = raw_key.rfind("/") + 1
+            rel_prefix = raw_key[:cut]
+            rel = f"{rel_prefix}{cid}-{raw_key[cut:]}"
+            target = jvm.org.apache.hadoop.fs.Path(f"{files_base}/{rel}")
+            fs.mkdirs(target.getParent())
+            if not fs.rename(src, target):
+                raise PipelineRunError(
+                    f"staging rename failed for table {table!r}"
+                )
+            rels.append(f"files/{rel}")
+            if raw_stats is None:
+                continue
+            # keyed by the RAW on-disk path: the aggregation's keys are
+            # the URI unquoted exactly once, which IS the on-disk
+            # (hive-escaped) name — unquoting again here would
+            # double-decode escaped partition values (e.g. 'a%3Ab' →
+            # 'a:b') and mis-file every such file as rows:0.
+            s = raw_stats.get(raw_key)
+            if s is None:
+                # absent from the aggregation: either a genuinely
+                # zero-row part file, or the URI-decoding assumption
+                # above broke — reconciled below (a rows:0 entry is
+                # PRUNE-ALWAYS, so a mis-keyed live file must not get
+                # one)
+                s = {"rows": 0, "cols": {}}
+                fallback.append(f"files/{rel}")
+            else:
+                consumed.add(raw_key)
+            bf = raw_blooms.get(raw_key)
+            if bf:
+                s = dict(s)
+                s["bf"] = bf
+            if rel_prefix:
+                s = dict(s)
+                s["part"] = dict(
+                    seg.split("=", 1)
+                    for seg in rel_prefix.rstrip("/").split("/")
+                )
+            staged_stats[f"files/{rel}"] = s
         if raw_stats is not None and fallback and set(raw_stats) - consumed:
             # reconciliation failed: some aggregation rows matched no
             # renamed part-file, so the rows:0 fallbacks above are NOT
@@ -2053,11 +2141,21 @@ class VersionedLake(ParquetLake):
     @staticmethod
     def _declarations(snap: dict) -> dict:
         """The table-level declarations every commit carries forward
-        from the snapshot it builds on."""
+        from the snapshot it builds on.  ``uniform_schema`` records that
+        every live file holds exactly the manifest's columns, so reads
+        may pin that schema instead of merging the files' (see
+        :meth:`_reader`): ``create`` and
+        full rewrites set it, an append that adds or retypes a column
+        drops it, and the rewrite verbs keep it (they stage pinned
+        reads of the table and deltas of its own columns).  Manifests
+        written before the field existed lack it, so their reads merge
+        schemas too."""
         out = {
             "partition_by": list(snap.get("partition_by") or []),
             "dict_columns": list(snap.get("dict_columns") or []),
         }
+        if snap.get("uniform_schema"):
+            out["uniform_schema"] = True
         if snap.get("bloom_columns"):
             out["bloom_columns"] = list(snap["bloom_columns"])
             if snap.get("bloom_bits"):
@@ -2324,6 +2422,7 @@ class VersionedLake(ParquetLake):
             "dict_columns": dict_columns,
             "bloom_columns": bloom_columns,
             "bloom_bits": bloom_bits,
+            "uniform_schema": True,
         }
         files, schema, stats = self._stage_files(df, table, layout)
         b = batch_id if batch_id is not None else self._pending_batch
@@ -2376,6 +2475,12 @@ class VersionedLake(ParquetLake):
                     df, table, layout
                 )
                 staged_parts = parts
+            # files of a wider (or retyped) frame keep columns the
+            # manifest schema lacks: reads merge schemas from then on
+            layout["uniform_schema"] = mschema is None or (
+                bool(snap.get("uniform_schema"))
+                and _columns_within(schema, mschema)
+            )
             try:
                 # O(delta) commit: the manifest records only the added
                 # files; the live list is never rewritten on append
@@ -2406,7 +2511,9 @@ class VersionedLake(ParquetLake):
         if expected is None:
             expected = self.current_version(table)
         snap = self._snapshot(table, expected)
-        layout = {**snap, "partition_by": partition_by}
+        layout = {
+            **snap, "partition_by": partition_by, "uniform_schema": True
+        }
         files, schema, stats = self._stage_files(df, table, layout)
         self._commit(
             table, files, layout, schema, expected,
@@ -2504,17 +2611,21 @@ class VersionedLake(ParquetLake):
         return len(touched_dirs)
 
     def _read_rels(
-        self, table: str, rels: list[str], schema_json: str
+        self, table: str, rels: list[str], version: int
     ) -> DataFrame:
-        """Plan over an explicit file subset in manifest-schema column
-        order (hive-partitioned reads append partition columns last;
-        rewrite verbs need the declared order for stable staging)."""
-        schema = T.StructType.fromJson(json.loads(schema_json))
+        """Plan over an explicit file subset of ``version`` in
+        manifest-schema column order (hive-partitioned reads append
+        partition columns last; rewrite verbs need the declared order
+        for stable staging).  Columns an append added follow the
+        declared ones, so the rewrite restages them."""
+        schema = T.StructType.fromJson(
+            json.loads(self._snapshot(table, version)["schema"])
+        )
         if not rels:
             return self.spark.createDataFrame([], schema)
-        df = self.spark.read.option(
-            "basePath", self.files_dir(table)
-        ).parquet(*[f"{self.table_dir(table)}/{rel}" for rel in rels])
+        df = self._reader(table, version).parquet(
+            *[f"{self.table_dir(table)}/{rel}" for rel in rels]
+        )
         names = [f.name for f in schema.fields if f.name in set(df.columns)]
         extras = [c for c in df.columns if c not in set(names)]
         return df.select(*[F.col(f"`{c}`") for c in names + extras])
@@ -2600,7 +2711,7 @@ class VersionedLake(ParquetLake):
         new_files: list[str] = []
         new_stats: dict[str, dict] = {}
         if rewrite:
-            df = self._read_rels(table, rewrite, m["schema"])
+            df = self._read_rels(table, rewrite, v)
             # NULL predicate rows SURVIVE a delete (WHERE semantics)
             survivors = df.where(
                 ~F.coalesce(
@@ -2668,21 +2779,22 @@ class VersionedLake(ParquetLake):
         m = self.resolve_manifest(table, v)
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         check_same_columns(df, self.spark.createDataFrame([], schema))
-        null_key = df.where(
-            " OR ".join(f"`{k}` IS NULL" for k in keys)
-        ).limit(1)
-        if null_key.count() > 0:
-            raise PipelineRunError(
-                f"merge_keyed: delta contains NULL values in key(s) "
-                f"{keys!r}; MERGE keys must be non-NULL"
-            )
-        # the delta's key envelope: ONE tiny aggregation, model-sized
-        # collect (2 values per key column)
-        aggs = []
+        # the delta's key envelope and its NULL-key count: ONE tiny
+        # aggregation, model-sized collect (2 values per key column)
+        aggs = [
+            F.count(
+                F.when(F.expr(" OR ".join(f"`{k}` IS NULL" for k in keys)), 1)
+            ).alias("__null_keys")
+        ]
         for k in keys:
             aggs.append(F.min(F.col(f"`{k}`")).alias(f"mn__{k}"))
             aggs.append(F.max(F.col(f"`{k}`")).alias(f"mx__{k}"))
         env = df.agg(*aggs).collect()[0]
+        if env["__null_keys"]:
+            raise PipelineRunError(
+                f"merge_keyed: delta contains NULL values in key(s) "
+                f"{keys!r}; MERGE keys must be non-NULL"
+            )
         if env[f"mn__{keys[0]}"] is None:
             self.last_rewrite_files = (0, 0, _resolved_count(m))
             return 0  # empty delta: nothing to update or insert
@@ -2697,7 +2809,7 @@ class VersionedLake(ParquetLake):
             # insert-only: existing rows are untouched by contract, so
             # stage ONLY the unmatched delta rows as new files — an
             # append-shaped commit, zero rewrites
-            affected = self._read_rels(table, candidates, m["schema"])
+            affected = self._read_rels(table, candidates, v)
             inserts = df.join(
                 affected.select(*keys).dropDuplicates(keys),
                 keys,
@@ -2717,7 +2829,7 @@ class VersionedLake(ParquetLake):
                 op="merge",
             )
             return 0
-        affected = self._read_rels(table, candidates, m["schema"])
+        affected = self._read_rels(table, candidates, v)
         merged = merge_frames(
             df,
             affected,

@@ -48,6 +48,13 @@ def get_spark(
     ``shuffle_partitions`` defaults to the core count locally; on a real
     cluster set it to ~2-3x total executor cores (or rely on AQE coalesce,
     which is enabled here and shrinks post-shuffle partitions at runtime).
+
+    Parquet timestamps are written as ``TIMESTAMP_MICROS`` instead of
+    Spark's legacy INT96: parquet-java records no min/max for INT96
+    columns, and the versioned lake builds its per-file zone maps from
+    the footer statistics of the files it stages (``VersionedLake``
+    falls back to a Spark aggregation for INT96 files, one job per
+    commit).
     """
     cpus = cpus or DEFAULT_CPUS
     _ensure_worker_import_path()
@@ -63,6 +70,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # the driver's events table carries TIMESTAMP(NANOS) parquet, which
         # Spark has no native type for; read as long and let the source
         # loader project it back to a microsecond timestamp

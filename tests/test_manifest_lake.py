@@ -12,7 +12,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from df_to_azure_spark.exceptions import ConcurrentWriteError, PipelineRunError
+from df_to_azure_spark.exceptions import (
+    ColumnMismatchError,
+    ConcurrentWriteError,
+    PipelineRunError,
+)
 from df_to_azure_spark.operators.manifest import VersionedLake
 
 
@@ -294,6 +298,66 @@ def test_append_schema_evolution_reads_with_merge_schema(spark, lake):
         for r in lake.read("t", merge_schema=True).collect()
     }
     assert got == {(1, "a", None), (2, "b", 9.5)}
+
+
+def test_reads_pin_the_manifest_schema_until_an_append_widens_it(
+    spark, lake
+):
+    """``uniform_schema`` (reads may pin the manifest schema) holds
+    after create and same-schema appends, is dropped by an append that
+    adds a column, and comes back with a full rewrite (compact)."""
+    lake.create(_df(spark, [(1, "a")]), "t")
+    lake.append(_df(spark, [(2, "b")]), "t")
+    assert lake._load_manifest("t", 2).get("uniform_schema") is True
+    wider = spark.createDataFrame(
+        [(3, "c", 1.5)], "id bigint, v string, score double"
+    )
+    lake.append(wider, "t")
+    assert "uniform_schema" not in lake._load_manifest("t", 3)
+    # from here every read merges the files' schemas
+    assert lake.read("t").columns == ["id", "v", "score"]
+    lake.append(_df(spark, [(4, "d")]), "t")
+    assert "uniform_schema" not in lake._load_manifest("t", 4)
+    lake.compact("t", target_files=1)
+    m = lake._load_manifest("t", 5)
+    assert m.get("uniform_schema") is True
+    assert "score" in m["schema"]
+
+
+def test_rewrites_over_evolved_files_keep_the_added_column(spark, lake):
+    """A rewrite restages every column of the files it reads: after an
+    append added ``score``, a delete_where touching only the new file,
+    and one touching old and new files together, keep the survivors'
+    scores; merge_keyed and the inherited full upsert refuse a delta
+    without ``score`` instead of dropping the column."""
+    # one file per commit, so each delete below rewrites whole files
+    lake.create(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), "t")
+    lake.append(
+        spark.createDataFrame(
+            [(3, "c", 3.5), (4, "d", 4.5), (5, "e", 5.5)],
+            "id bigint, v string, score double",
+        ).coalesce(1),
+        "t",
+    )
+
+    def scores():
+        return {
+            r.id: r.score for r in lake.read("t", merge_schema=True).collect()
+        }
+
+    assert lake.delete_where("t", [("id", "=", 3)]) == 1
+    assert lake.last_rewrite_files[1] == 1
+    assert scores() == {1: None, 2: None, 4: 4.5, 5: 5.5}
+    assert lake.delete_where("t", [("id", "in", [1, 4])]) == 2
+    assert lake.last_rewrite_files[1] == 2
+    assert scores() == {2: None, 5: 5.5}
+    v = lake.current_version("t")
+    with pytest.raises(ColumnMismatchError):
+        lake.merge_keyed(_df(spark, [(5, "E")]), "t", ["id"])
+    with pytest.raises(ColumnMismatchError):
+        lake.upsert(_df(spark, [(5, "E")]), "t", ["id"])
+    assert lake.current_version("t") == v
+    assert scores() == {2: None, 5: 5.5}
 
 
 def test_interleaved_writers_across_checkpoint_boundaries(spark, tmp_path):
@@ -823,13 +887,15 @@ def test_merge_keyed_clause_variants_and_guards(spark, lake):
     assert got == {(1, "a"), (2, "B"), (3, "c"), (7, "g")}
     m = lake._load_manifest("t", v_before + 1)
     assert m.get("remove") in (None, [])  # append-shaped: no file removed
-    # NULL keys refused
+    # NULL keys refused, before any write
+    v = lake.current_version("t")
     with pytest.raises(PipelineRunError, match="NULL"):
         lake.merge_keyed(
             spark.createDataFrame([(None, "n")], "id bigint, v string"),
             "t",
             ["id"],
         )
+    assert lake.current_version("t") == v
     # empty delta: no commit at all
     v = lake.current_version("t")
     assert lake.merge_keyed(

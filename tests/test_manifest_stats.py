@@ -749,3 +749,238 @@ def test_dict_stats_cap_overflow_is_safe(spark, tmp_path):
     # unknown column in the declaration fails loudly at create
     with pytest.raises(PipelineRunError, match="dict_columns"):
         lake.create(df, "t2", dict_columns=["nope"])
+
+
+# -- footer zone maps ---------------------------------------------------
+# Staged files get their zone maps from their Parquet footers; the
+# aggregation they replace stays the fallback.  Parity: for every stats
+# type the two produce the same manifest entries.
+
+_PARITY_SCHEMA = (
+    "grp string, b tinyint, s smallint, i int, l bigint, f float, "
+    "d double, bo boolean, st string, txt string, dt date, ts timestamp, "
+    "ntz timestamp_ntz, d9 decimal(9,2), d18 decimal(18,4), nothing int"
+)
+
+
+def _parity_rows(n_per_group=25):
+    import decimal
+
+    nan = float("nan")
+    rows = []
+    for g, grp in enumerate(["a:b", "plain", "nan", "allnull"]):
+        for j in range(n_per_group):
+            i = g * 1000 + j
+            nulls = grp == "allnull"
+            rows.append(
+                (
+                    grp,
+                    None if nulls else (j % 200) - 100,
+                    None if nulls else -i,
+                    None if nulls else i,
+                    None if nulls else i * 1_000_000_007,
+                    nan if grp == "nan" else (None if nulls else i / 4 - 7),
+                    nan if grp == "nan" and j == 3 else (
+                        None if nulls or j == 5 else -i / 3
+                    ),
+                    None if nulls else j % 2 == 0,
+                    None if nulls else f"{chr(0x1F600 + j)}-{i}",
+                    None if nulls else ("é" * 300) + str(j % 7),
+                    None if nulls else datetime.date(1960 + j, 2, 28),
+                    None if nulls else datetime.datetime(
+                        2024, 1, 1, 12, 0, 0, j
+                    ) + datetime.timedelta(hours=i),
+                    None if nulls else datetime.datetime(1901, 12, 13, 20, j),
+                    None if nulls else decimal.Decimal(f"{i - 50}.25"),
+                    None if nulls else decimal.Decimal(f"-{i}.0001"),
+                    None,
+                )
+            )
+    return rows
+
+
+def _commit_both_ways(spark, tmp_path, monkeypatch, df, **create_kw):
+    """Commit ``df`` once with footer zone maps and once with the
+    aggregation forced, returning both stats maps keyed by
+    (partition dir, part index) — the only parts of a staged name two
+    writes of the same frame share."""
+    import re
+
+    from df_to_azure_spark.operators import manifest
+
+    def _norm(stats):
+        out = {}
+        for rel, st in stats.items():
+            head, _, name = rel.rpartition("/")
+            idx = re.search(r"part-(\d+)", name).group(1)
+            out[(head, idx)] = st
+        return out
+
+    served = []
+    real = manifest._footer_zone_map
+
+    def _spy(path, eligible):
+        zm = real(path, eligible)
+        served.append(zm is not None)
+        return zm
+
+    footer_lake = VersionedLake(spark, str(tmp_path / "footer"))
+    monkeypatch.setattr(manifest, "_footer_zone_map", _spy)
+    footer_lake.create(df, "t", **create_kw)
+    agg_lake = VersionedLake(spark, str(tmp_path / "agg"))
+    monkeypatch.setattr(manifest, "_footer_zone_map", lambda p, e: None)
+    agg_lake.create(df, "t", **create_kw)
+    monkeypatch.setattr(manifest, "_footer_zone_map", real)
+    return (
+        _norm(footer_lake.resolve_manifest("t", 1)["stats"]),
+        _norm(agg_lake.resolve_manifest("t", 1)["stats"]),
+        served,
+    )
+
+
+@pytest.mark.parametrize("partition_by", [None, ["grp"]])
+def test_footer_zone_maps_equal_the_aggregate(
+    spark, tmp_path, monkeypatch, partition_by
+):
+    """Every _STATS_TYPES member, NaN (a max and an all-NaN file),
+    nulls, an all-null column and all-null files, >256-char and
+    non-BMP strings, decimals at precision 9 and 18, timestamp and NTZ
+    — flat, and hive-partitioned with an escaped value."""
+    from df_to_azure_spark.operators.manifest import _STATS_TYPES
+
+    df = spark.createDataFrame(_parity_rows(), _PARITY_SCHEMA)
+    covered = {type(f.dataType) for f in df.schema.fields}
+    assert set(_STATS_TYPES) <= covered
+    frame = df if partition_by else df.repartition(3)
+    footer, agg, served = _commit_both_ways(
+        spark, tmp_path, monkeypatch, frame, partition_by=partition_by
+    )
+    assert served and all(served)
+    assert footer == agg
+    # the comparison is not vacuous: every type carries a stat somewhere
+    recorded = set().union(*(st["cols"] for st in footer.values()))
+    expect = {
+        "b", "s", "i", "l", "f", "d", "bo", "st", "txt", "dt", "ts", "ntz",
+        "d9", "d18", "nothing",
+    }
+    if partition_by:
+        assert any("a%3Ab" in head for head, _ in footer)
+    else:
+        expect.discard("f")  # round-robin puts a NaN f in every file
+    assert recorded >= expect
+
+
+def test_footer_zone_maps_span_row_groups(spark, tmp_path, monkeypatch):
+    """A file of many row groups: min/max over the groups, null counts
+    summed."""
+    import pyarrow.parquet as pq
+
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    old = hconf.get("parquet.block.size")
+    hconf.set("parquet.block.size", "2048")
+    try:
+        df = spark.range(0, 3000).selectExpr(
+            "id",
+            "IF(id % 7 = 0, NULL, CAST(id * 31 % 1000 AS INT)) AS v",
+            "CONCAT('s', id % 97) AS s",
+        ).coalesce(1)
+        footer, agg, served = _commit_both_ways(
+            spark, tmp_path, monkeypatch, df
+        )
+    finally:
+        if old is None:
+            hconf.unset("parquet.block.size")
+        else:
+            hconf.set("parquet.block.size", old)
+    files = list((tmp_path / "footer").rglob("*.parquet"))
+    data = [p for p in files if "_manifests" not in str(p)]
+    assert pq.read_metadata(str(data[0])).num_row_groups > 1
+    assert served == [True]
+    assert footer == agg
+
+
+def test_zero_row_file_stats(spark, tmp_path, monkeypatch):
+    df = spark.createDataFrame([], "id bigint, s string")
+    footer, agg, served = _commit_both_ways(
+        spark, tmp_path, monkeypatch, df
+    )
+    assert footer == agg
+    assert [st["rows"] for st in footer.values()] == [0]
+
+
+def test_strings_past_the_footer_stats_limit_fall_back(
+    spark, tmp_path, monkeypatch
+):
+    """parquet-java writes no statistics for a string column whose
+    min+max exceed 4 KiB, so the commit falls back to the aggregate —
+    which still records the truncated-prefix bounds."""
+    df = spark.createDataFrame(
+        [(1, "a" * 5000), (2, "b" * 5000), (3, "c")], "id bigint, doc string"
+    ).coalesce(1)
+    footer, agg, served = _commit_both_ways(spark, tmp_path, monkeypatch, df)
+    assert served == [False]
+    assert footer == agg
+    (st,) = footer.values()
+    assert st["cols"]["doc"]["mn"] == "a" * 64
+    assert st["cols"]["doc"]["nl"] == 0
+
+
+def test_int96_timestamps_still_record_and_prune(spark, tmp_path):
+    """A session that keeps Spark's INT96 timestamps has no footer
+    min/max for them; the aggregate fallback records the stats and
+    scans prune on them."""
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        lake = VersionedLake(spark, str(tmp_path / "int96"))
+        rows = [
+            (i, datetime.datetime(2024, 1, 1) + datetime.timedelta(hours=i))
+            for i in range(400)
+        ]
+        df = spark.createDataFrame(rows, "id bigint, ts timestamp")
+        lake.create(df, "t", sort_by=["ts"], sort_files=4)
+    finally:
+        spark.conf.set(key, old)
+    m = lake.resolve_manifest("t", 1)
+    assert all("ts" in st["cols"] for st in m["stats"].values())
+    lo = datetime.datetime(2024, 1, 2)
+    out = lake.scan("t", [("ts", "between", (lo, lo))])
+    assert [r.id for r in out.collect()] == [24]
+    assert lake.last_scan_files[0] < lake.last_scan_files[1]
+
+
+def _spark_jobs(spark, fn):
+    """(result, Spark jobs ``fn`` ran), counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_plain_append_runs_one_spark_job(spark, lake):
+    """Without dict or bloom declarations an append is its write job
+    alone: zone maps come from the staged footers, nothing reads the
+    stage back."""
+    lake.create(_nums(spark, 0, 100), "t")
+    _, jobs = _spark_jobs(
+        spark, lambda: lake.append(_nums(spark, 100, 200), "t")
+    )
+    assert jobs == 1
+    assert lake.read("t").count() == 200
+
+
+def test_building_a_scan_runs_no_spark_job(spark, lake):
+    """The manifest holds the schema, so planning a scan reads no
+    footer; the first job is the caller's action."""
+    lake.create(_nums(spark, 0, 400).repartition(4), "t")
+    df, jobs = _spark_jobs(spark, lambda: lake.scan("t", [("id", "<", 10)]))
+    assert jobs == 0
+    assert df.count() == 10
