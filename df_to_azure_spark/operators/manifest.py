@@ -73,12 +73,16 @@ import time
 import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from df_to_azure_spark.checks import ensure_unique_keys
-from df_to_azure_spark.exceptions import ConcurrentWriteError, PipelineRunError
+from df_to_azure_spark.exceptions import (
+    ColumnMismatchError,
+    ConcurrentWriteError,
+    PipelineRunError,
+)
 from df_to_azure_spark.operators.lake import ParquetLake, _zorder_cluster
 from df_to_azure_spark.operators.upsert import upsert_frames
 
@@ -468,18 +472,31 @@ def _footer_zone_map(path: str, eligible: list) -> dict | None:
     return {"rows": md.num_rows, "cols": cols}
 
 
-def _columns_within(schema_json: str, base_json: str) -> bool:
-    """True when every column of ``schema_json`` is in ``base_json``
-    with the same type: files written with it hold nothing a read
-    pinned to ``base_json`` would drop or mistype."""
-    base = {
-        f.name: f.dataType
-        for f in T.StructType.fromJson(json.loads(base_json)).fields
-    }
-    return all(
-        base.get(f.name) == f.dataType
-        for f in T.StructType.fromJson(json.loads(schema_json)).fields
-    )
+def _widened_schema(base_json: str, frame: T.StructType) -> str:
+    """The manifest schema after appending files of schema ``frame``:
+    ``base_json``'s fields in their order, then the frame's new fields
+    in frame order, made nullable (older files read them as NULL).
+    A frame that retypes an existing column raises
+    ``ColumnMismatchError``: no single schema could read both files."""
+    base = T.StructType.fromJson(json.loads(base_json))
+    known = {f.name: f.dataType.simpleString() for f in base.fields}
+    retyped = [
+        f"{f.name} {known[f.name]} -> {f.dataType.simpleString()}"
+        for f in frame.fields
+        if f.name in known and known[f.name] != f.dataType.simpleString()
+    ]
+    if retyped:
+        raise ColumnMismatchError(
+            f"append would retype column(s): {', '.join(retyped)}"
+        )
+    added = [
+        T.StructField(f.name, f.dataType, True)
+        for f in frame.fields
+        if f.name not in known
+    ]
+    if not added:
+        return base_json
+    return T.StructType(base.fields + added).json()
 
 
 def _is_ckpt_rooted(m: dict) -> bool:
@@ -561,7 +578,10 @@ class VersionedLake(ParquetLake):
     commit by one atomic rename.  Extra surface over the base lake:
     ``versions``/``current_version``, time-travel ``read(version=...)``,
     ``has_batch`` + ``batch_id`` idempotence markers, and a
-    retention-based ``vacuum(keep_last=...)``.
+    retention-based ``vacuum(keep_last=...)``.  One difference: the
+    manifest schema is the table schema, so ``read`` takes no
+    ``merge_schema`` — an append that adds columns widens the manifest
+    schema, and every read shows them (NULL for older rows).
     """
 
     def __init__(
@@ -950,17 +970,13 @@ class VersionedLake(ParquetLake):
         return batch_id in self._latest(table).get("batch_ids", [])
 
     # -- reads ---------------------------------------------------------
-    def read(
-        self,
-        table: str,
-        merge_schema: bool = False,
-        version: int | None = None,
-    ) -> DataFrame:
+    def read(self, table: str, version: int | None = None) -> DataFrame:
         """Plan over the file list of one manifest version (latest by
         default; pass ``version`` to time-travel).  The scan needs no
         directory listing, and the referenced files are immutable, so a
-        concurrent commit can never tear it.  The schema comes from
-        :meth:`_reader`."""
+        concurrent commit can never tear it.  The schema is the
+        manifest's (:meth:`_read_files`): columns an append added show
+        with no option, NULL for rows of older files."""
         v = self.current_version(table) if version is None else version
         if v is None:
             raise PipelineRunError(
@@ -969,29 +985,35 @@ class VersionedLake(ParquetLake):
         m = self.resolve_manifest(table, v)
         if version is None:
             self._read_version[table] = v
-        paths = [f"{self.table_dir(table)}/{rel}" for rel in m["files"]]
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self._reader(table, v, merge_schema).parquet(*paths)
+        return self._read_files(table, v, m["files"])
 
-    def _reader(
-        self, table: str, version: int, merge_schema: bool = False
-    ) -> DataFrameReader:
-        """The Parquet reader over files of ``version``.  While every
-        file holds exactly the manifest's columns (``uniform_schema``)
-        it takes the manifest's schema, so planning opens no footer.
-        Otherwise — and always under ``merge_schema=True`` — it merges
-        the files' schemas: columns an append added read as NULL for
-        older files, and a rewrite restages them instead of dropping
-        them."""
+    def _read_files(
+        self, table: str, version: int, rels: list[str]
+    ) -> DataFrame:
+        """Plan over the files ``rels`` of ``version`` with the
+        manifest's schema, in its column order (a hive-partitioned read
+        would put partition columns last).  The schema is pinned, so
+        planning opens no footer, a file lacking a column added later
+        reads it as NULL, and zero files give the typed empty frame.
+
+        A manifest without the ``uniform_schema`` mark comes from a
+        writer that let files hold columns its schema lacks; those
+        files are read with ``mergeSchema``, and the extra columns
+        follow the manifest's, until a full rewrite marks the table."""
         snap = self._snapshot(table, version)
+        schema = T.StructType.fromJson(json.loads(snap["schema"]))
         reader = self.spark.read.option("basePath", self.files_dir(table))
-        if merge_schema or not snap.get("uniform_schema"):
-            return reader.option("mergeSchema", "true")
-        return reader.schema(
-            T.StructType.fromJson(json.loads(snap["schema"]))
+        if snap.get("uniform_schema") or not rels:
+            reader = reader.schema(schema)
+        else:
+            reader = reader.option("mergeSchema", "true")
+        df = reader.parquet(
+            *[f"{self.table_dir(table)}/{rel}" for rel in rels]
         )
+        cols = df.columns
+        names = [f.name for f in schema.fields if f.name in cols]
+        names += [c for c in cols if c not in names]
+        return df.select(*[F.col(f"`{c}`") for c in names])
 
     # -- stats-pruned reads ---------------------------------------------
     @staticmethod
@@ -1552,12 +1574,14 @@ class VersionedLake(ParquetLake):
         table: str,
         predicates: list[tuple],
         version: int | None = None,
-        merge_schema: bool = False,
     ) -> DataFrame:
         """Zone-map-pruned read: plan over only the manifest files whose
         per-file min/max stats could satisfy ``predicates``, then apply
         the SAME predicates as a real Spark filter — results are always
-        identical to ``read(table).where(...)``; the stats only cut IO.
+        identical to ``read(table).where(...)``, in the same manifest
+        schema and column order (:meth:`_read_files`); the stats only
+        cut IO.  Predicates may name any column of that schema,
+        including ones an append added.
 
         ``predicates`` is a conjunction of ``(column, op, value)`` with
         op in ``= != < <= > >= between in is_null is_not_null
@@ -1594,32 +1618,12 @@ class VersionedLake(ParquetLake):
             )
         m = self.resolve_manifest(table, v)
         schema = T.StructType.fromJson(json.loads(m["schema"]))
-        if not merge_schema:
-            self._validate_predicate_columns(m, schema, predicates, table)
+        self._validate_predicate_columns(m, schema, predicates, table)
         kept, total = self._prune(m, predicates)
         self.last_scan_files = (len(kept), total)
-        if not kept:
-            # empty result: skip the residual filter (a filter on the
-            # empty set is a no-op, and under merge_schema the pinned
-            # manifest schema may predate an evolved predicate column —
-            # referencing it here would raise instead of returning the
-            # empty frame)
-            return self.spark.createDataFrame([], schema)
-        else:
-            df = self._reader(table, v, merge_schema).parquet(
-                *[f"{self.table_dir(table)}/{rel}" for rel in kept]
-            )
-            # deterministic layout: a hive-partitioned parquet read
-            # appends partition columns LAST, while the fully-pruned
-            # branch above builds from the manifest schema — without
-            # this select the same query would change column order
-            # depending on whether pruning eliminated every file,
-            # breaking positional consumers (unionAll).  Evolved extra
-            # columns (merged schemas) follow in their read order.
-            names = [f.name for f in schema.fields if f.name in set(df.columns)]
-            extras = [c for c in df.columns if c not in set(names)]
-            df = df.select(*[F.col(f"`{c}`") for c in names + extras])
-        return df.where(self._predicate_condition(predicates))
+        return self._read_files(table, v, kept).where(
+            self._predicate_condition(predicates)
+        )
 
     @staticmethod
     def _validate_predicate_columns(m, schema, predicates, table) -> None:
@@ -1627,10 +1631,8 @@ class VersionedLake(ParquetLake):
         (plus partition columns) BEFORE pruning: without this, a typo'd
         column name raises AnalysisException when any file survives
         pruning but silently returns an empty frame when other conjuncts
-        prune everything — an inconsistent error surface.  ``scan``'s
-        ``merge_schema=True`` stays the one deliberate pass-through: an
-        evolved predicate column may exist only in files newer than the
-        pinned manifest schema."""
+        prune everything — an inconsistent error surface.  Columns an
+        append added are in the manifest schema, so they pass."""
         known = {f.name for f in schema.fields} | set(
             m.get("partition_by") or []
         )
@@ -1640,8 +1642,7 @@ class VersionedLake(ParquetLake):
         if unknown:
             raise PipelineRunError(
                 f"predicate column(s) {unknown} are not in table "
-                f"{table!r}'s schema (scan accepts merge_schema=True "
-                "for columns added by schema evolution)"
+                f"{table!r}'s schema"
             )
 
     @staticmethod
@@ -2142,14 +2143,15 @@ class VersionedLake(ParquetLake):
     def _declarations(snap: dict) -> dict:
         """The table-level declarations every commit carries forward
         from the snapshot it builds on.  ``uniform_schema`` records that
-        every live file holds exactly the manifest's columns, so reads
-        may pin that schema instead of merging the files' (see
-        :meth:`_reader`): ``create`` and
-        full rewrites set it, an append that adds or retypes a column
-        drops it, and the rewrite verbs keep it (they stage pinned
-        reads of the table and deltas of its own columns).  Manifests
-        written before the field existed lack it, so their reads merge
-        schemas too."""
+        every column any live file holds is in the manifest schema with
+        the same type; a file may lack columns added later, and those
+        read as NULL, so reads pin that schema (:meth:`_read_files`).
+        ``create`` and full rewrites set it, and no commit drops it: an
+        append widens the schema with the frame's new columns and
+        refuses a retyped one (:func:`_widened_schema`), and the
+        rewrite verbs stage pinned reads of the table and deltas of its
+        own columns.  Manifests written before the field existed lack
+        it, so their reads merge the files' schemas."""
         out = {
             "partition_by": list(snap.get("partition_by") or []),
             "dict_columns": list(snap.get("dict_columns") or []),
@@ -2444,14 +2446,17 @@ class VersionedLake(ParquetLake):
         Appended files commute with any interleaved commit, so a lost
         OCC race is rebased automatically: the staged files are reused
         and only the manifest contents recompute (``_retries`` bounds
-        the loop; pathological contention surfaces the error)."""
+        the loop; pathological contention surfaces the error).  A frame
+        with new columns widens the manifest schema; one that retypes a
+        column raises ``ColumnMismatchError`` before anything is staged
+        (:func:`_widened_schema`)."""
         if timestamped_file:
             raise ValueError(
                 "timestamped_file is a plain-ParquetLake layout feature; "
                 "the versioned manifest already names every file uniquely"
             )
         files: list[str] | None = None
-        schema = staged_parts = None
+        staged_parts = None
         staged_stats: dict[str, dict] = {}
         last_err: Exception | None = None
         for _ in range(max(1, _retries)):
@@ -2464,23 +2469,21 @@ class VersionedLake(ParquetLake):
                 **snap,
                 "partition_by": snap.get("partition_by") or partition_by,
             }
-            mschema = None
             if expected is not None and _resolved_count(
                 self.resolve_manifest(table, expected)
             ):
-                mschema = snap["schema"]
+                schema = _widened_schema(snap["schema"], df.schema)
+            else:
+                # no live file to read alongside: the frame's schema is
+                # the table's
+                schema = df.schema.json()
+                layout["uniform_schema"] = True
             parts = list(layout["partition_by"] or [])
             if files is None or staged_parts != parts:
-                files, schema, staged_stats = self._stage_files(
+                files, _, staged_stats = self._stage_files(
                     df, table, layout
                 )
                 staged_parts = parts
-            # files of a wider (or retyped) frame keep columns the
-            # manifest schema lacks: reads merge schemas from then on
-            layout["uniform_schema"] = mschema is None or (
-                bool(snap.get("uniform_schema"))
-                and _columns_within(schema, mschema)
-            )
             try:
                 # O(delta) commit: the manifest records only the added
                 # files; the live list is never rewritten on append
@@ -2489,7 +2492,7 @@ class VersionedLake(ParquetLake):
                     files,
                     [],
                     layout,
-                    mschema or schema,
+                    schema,
                     expected,
                     self._carry_batches(snap, batch_id),
                     stats=staged_stats, op="append",
@@ -2530,7 +2533,7 @@ class VersionedLake(ParquetLake):
         before), but the old files stay on disk until ``vacuum`` — a
         reader of any retained version keeps working through the
         rewrite."""
-        df = self.read(table, merge_schema=True)
+        df = self.read(table)
         m = self.resolve_manifest(table, self._read_version[table])
         before = _resolved_count(m)
         parts = m.get("partition_by")
@@ -2609,26 +2612,6 @@ class VersionedLake(ParquetLake):
             stats=new_stats, op="upsert_partitioned",
         )
         return len(touched_dirs)
-
-    def _read_rels(
-        self, table: str, rels: list[str], version: int
-    ) -> DataFrame:
-        """Plan over an explicit file subset of ``version`` in
-        manifest-schema column order (hive-partitioned reads append
-        partition columns last; rewrite verbs need the declared order
-        for stable staging).  Columns an append added follow the
-        declared ones, so the rewrite restages them."""
-        schema = T.StructType.fromJson(
-            json.loads(self._snapshot(table, version)["schema"])
-        )
-        if not rels:
-            return self.spark.createDataFrame([], schema)
-        df = self._reader(table, version).parquet(
-            *[f"{self.table_dir(table)}/{rel}" for rel in rels]
-        )
-        names = [f.name for f in schema.fields if f.name in set(df.columns)]
-        extras = [c for c in df.columns if c not in set(names)]
-        return df.select(*[F.col(f"`{c}`") for c in names + extras])
 
     def delete_where(self, table: str, predicates: list[tuple]) -> int:
         """Predicate-scoped DELETE with pruning-bounded IO (Delta's
@@ -2711,7 +2694,7 @@ class VersionedLake(ParquetLake):
         new_files: list[str] = []
         new_stats: dict[str, dict] = {}
         if rewrite:
-            df = self._read_rels(table, rewrite, v)
+            df = self._read_files(table, v, rewrite)
             # NULL predicate rows SURVIVE a delete (WHERE semantics)
             survivors = df.where(
                 ~F.coalesce(
@@ -2809,7 +2792,7 @@ class VersionedLake(ParquetLake):
             # insert-only: existing rows are untouched by contract, so
             # stage ONLY the unmatched delta rows as new files — an
             # append-shaped commit, zero rewrites
-            affected = self._read_rels(table, candidates, v)
+            affected = self._read_files(table, v, candidates)
             inserts = df.join(
                 affected.select(*keys).dropDuplicates(keys),
                 keys,
@@ -2829,7 +2812,7 @@ class VersionedLake(ParquetLake):
                 op="merge",
             )
             return 0
-        affected = self._read_rels(table, candidates, v)
+        affected = self._read_files(table, v, candidates)
         merged = merge_frames(
             df,
             affected,
@@ -2912,16 +2895,9 @@ class VersionedLake(ParquetLake):
         added, removed = self.file_changes(table, v_from, v_to)
 
         def _load(rels: list[str], version: int, tag: str) -> DataFrame:
-            schema = T.StructType.fromJson(
-                json.loads(self.resolve_manifest(table, version)["schema"])
+            return self._read_files(table, version, rels).withColumn(
+                "change_type", F.lit(tag)
             )
-            if not rels:
-                df = self.spark.createDataFrame([], schema)
-            else:
-                df = self.spark.read.option(
-                    "basePath", self.files_dir(table)
-                ).parquet(*[f"{self.table_dir(table)}/{rel}" for rel in rels])
-            return df.withColumn("change_type", F.lit(tag))
 
         return _load(added, v_to, "insert").unionByName(
             _load(removed, v_from, "delete"), allowMissingColumns=True

@@ -283,10 +283,9 @@ def test_history_introspection(spark, lake):
     assert h[2].committed_ms >= h[1].committed_ms > 0
 
 
-def test_append_schema_evolution_reads_with_merge_schema(spark, lake):
+def test_append_schema_evolution_shows_in_a_plain_read(spark, lake):
     """Appending a frame with an extra column must commit cleanly; the
-    evolved column surfaces under merge_schema=True (NULL for old files)
-    and the default read keeps working."""
+    evolved column surfaces in a plain read (NULL for old files)."""
     lake.create(_df(spark, [(1, "a")]), "t")
     wider = spark.createDataFrame(
         [(2, "b", 9.5)], "id bigint, v string, score double"
@@ -295,7 +294,7 @@ def test_append_schema_evolution_reads_with_merge_schema(spark, lake):
     assert lake.read("t").count() == 2
     got = {
         (r.id, r.v, r.score)
-        for r in lake.read("t", merge_schema=True).collect()
+        for r in lake.read("t").collect()
     }
     assert got == {(1, "a", None), (2, "b", 9.5)}
 
@@ -304,8 +303,9 @@ def test_reads_pin_the_manifest_schema_until_an_append_widens_it(
     spark, lake
 ):
     """``uniform_schema`` (reads may pin the manifest schema) holds
-    after create and same-schema appends, is dropped by an append that
-    adds a column, and comes back with a full rewrite (compact)."""
+    after create and same-schema appends, and an append that adds a
+    column widens the manifest schema instead of dropping the mark;
+    a full rewrite (compact) keeps both."""
     lake.create(_df(spark, [(1, "a")]), "t")
     lake.append(_df(spark, [(2, "b")]), "t")
     assert lake._load_manifest("t", 2).get("uniform_schema") is True
@@ -313,11 +313,12 @@ def test_reads_pin_the_manifest_schema_until_an_append_widens_it(
         [(3, "c", 1.5)], "id bigint, v string, score double"
     )
     lake.append(wider, "t")
-    assert "uniform_schema" not in lake._load_manifest("t", 3)
-    # from here every read merges the files' schemas
+    m3 = lake._load_manifest("t", 3)
+    assert m3.get("uniform_schema") is True
+    assert "score" in m3["schema"]
     assert lake.read("t").columns == ["id", "v", "score"]
     lake.append(_df(spark, [(4, "d")]), "t")
-    assert "uniform_schema" not in lake._load_manifest("t", 4)
+    assert lake._load_manifest("t", 4).get("uniform_schema") is True
     lake.compact("t", target_files=1)
     m = lake._load_manifest("t", 5)
     assert m.get("uniform_schema") is True
@@ -329,7 +330,8 @@ def test_rewrites_over_evolved_files_keep_the_added_column(spark, lake):
     append added ``score``, a delete_where touching only the new file,
     and one touching old and new files together, keep the survivors'
     scores; merge_keyed and the inherited full upsert refuse a delta
-    without ``score`` instead of dropping the column."""
+    without ``score`` instead of dropping the column, and take a
+    full-width one."""
     # one file per commit, so each delete below rewrites whole files
     lake.create(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), "t")
     lake.append(
@@ -342,7 +344,7 @@ def test_rewrites_over_evolved_files_keep_the_added_column(spark, lake):
 
     def scores():
         return {
-            r.id: r.score for r in lake.read("t", merge_schema=True).collect()
+            r.id: r.score for r in lake.read("t").collect()
         }
 
     assert lake.delete_where("t", [("id", "=", 3)]) == 1
@@ -358,6 +360,101 @@ def test_rewrites_over_evolved_files_keep_the_added_column(spark, lake):
         lake.upsert(_df(spark, [(5, "E")]), "t", ["id"])
     assert lake.current_version("t") == v
     assert scores() == {2: None, 5: 5.5}
+    full = "id bigint, v string, score double"
+    lake.merge_keyed(
+        spark.createDataFrame([(2, "B", 2.5), (6, "f", 6.5)], full),
+        "t",
+        ["id"],
+    )
+    assert scores() == {2: 2.5, 5: 5.5, 6: 6.5}
+    lake.upsert(spark.createDataFrame([(5, "E", None)], full), "t", ["id"])
+    assert lake.current_version("t") == v + 2
+    assert scores() == {2: 2.5, 5: None, 6: 6.5}
+
+
+def test_retyped_append_raises_before_any_write(spark, lake, tmp_path):
+    """No one schema reads a column as two types: an append that
+    retypes one raises before staging a file, names the column and both
+    types, and leaves the table as it was."""
+    import os
+
+    lake.create(_df(spark, [(1, "a")]), "t")
+    v = lake.current_version("t")
+    files = tmp_path / "lake" / "t" / "files"
+    before = sorted(os.listdir(files))
+    with pytest.raises(ColumnMismatchError, match="v string -> bigint"):
+        lake.append(
+            spark.createDataFrame([(2, 7)], "id bigint, v bigint"), "t"
+        )
+    with pytest.raises(ColumnMismatchError, match="id bigint -> int"):
+        lake.append(spark.createDataFrame([(2, "b")], "id int, v string"), "t")
+    assert lake.current_version("t") == v
+    assert sorted(os.listdir(files)) == before
+    assert {(r.id, r.v) for r in lake.read("t").collect()} == {(1, "a")}
+
+
+def test_manifest_from_older_writers_reads_evolved_files(spark, tmp_path):
+    """Writers before the ``uniform_schema`` mark kept the manifest
+    schema narrow when an append added a column.  Such a table still
+    reads the added column (its files are read with mergeSchema), and
+    compact writes the mark and the widened schema."""
+    import json
+
+    root = str(tmp_path / "lake")
+    lake = VersionedLake(spark, root)
+    lake.create(_df(spark, [(1, "a")]), "t")
+    lake.append(
+        spark.createDataFrame(
+            [(2, "b", 9.5)], "id bigint, v string, score double"
+        ),
+        "t",
+    )
+    # v1 and v2 as the old writers laid them out: no mark, and v2
+    # keeps v1's narrow schema
+    narrow = lake._load_manifest("t", 1)["schema"]
+    for v in (1, 2):
+        doc = dict(lake._load_manifest("t", v), schema=narrow)
+        doc.pop("uniform_schema", None)
+        path = lake._manifest_path("t", v)
+        fs, jpath, _ = lake._fs(path)
+        fs.delete(jpath, False)
+        lake._write_small(path, json.dumps(doc))
+    fresh = VersionedLake(spark, root)
+    assert "uniform_schema" not in fresh._load_manifest("t", 2)
+    assert fresh.read("t").columns == ["id", "v", "score"]
+    rows = {(r.id, r.v, r.score) for r in fresh.read("t").collect()}
+    assert rows == {(1, "a", None), (2, "b", 9.5)}
+    # a fully pruned scan has no file to merge: the typed empty frame
+    assert fresh.scan("t", [("id", ">", 100)]).columns == ["id", "v"]
+    fresh.compact("t", target_files=1)
+    m = fresh._load_manifest("t", 3)
+    assert m.get("uniform_schema") is True
+    names = [f["name"] for f in json.loads(m["schema"])["fields"]]
+    assert names == ["id", "v", "score"]
+    assert {(r.id, r.v, r.score) for r in fresh.read("t").collect()} == rows
+
+
+def test_reads_keep_the_manifest_column_order(spark, lake):
+    """On a table partitioned by a middle column, ``read``, a scan that
+    keeps files and a fully pruned scan all list the manifest's column
+    order (a hive-partitioned Parquet read alone puts ``p`` last)."""
+    import json
+
+    lake.create(
+        spark.createDataFrame(
+            [(1, "x", "a"), (2, "y", "b")], "id bigint, p string, v string"
+        ),
+        "t",
+        partition_by=["p"],
+    )
+    order = [
+        f["name"] for f in json.loads(lake._latest("t")["schema"])["fields"]
+    ]
+    assert order == ["id", "p", "v"]
+    assert lake.read("t").columns == order
+    assert lake.scan("t", [("id", "=", 1)]).columns == order
+    assert lake.scan("t", [("id", "=", 100)]).columns == order
+    assert lake.last_scan_files[0] == 0
 
 
 def test_interleaved_writers_across_checkpoint_boundaries(spark, tmp_path):
@@ -389,8 +486,8 @@ def test_interleaved_writers_across_checkpoint_boundaries(spark, tmp_path):
 def test_schema_evolution_across_sidecar_checkpoint(spark, lake):
     """An evolved column crossing a columnar checkpoint: the sidecar
     advance unifies stat schemas (old rows get NULL stats for the new
-    column → always kept), merge_schema reads stay exact, and scan()
-    on the evolved column through the sidecar root never loses rows."""
+    column → always kept), plain reads stay exact, and scan() on the
+    evolved column through the sidecar root never loses rows."""
     lake.checkpoint_interval = 2
     lake.create(_df(spark, [(i, f"v{i}") for i in range(20)]), "t")
     wider = spark.createDataFrame(
@@ -403,23 +500,20 @@ def test_schema_evolution_across_sidecar_checkpoint(spark, lake):
     assert lake.read("t").count() == 30
     got = {
         (r.id, r.score)
-        for r in lake.read("t", merge_schema=True).where("score >= 5").collect()
+        for r in lake.read("t").where("score >= 5").collect()
     }
     assert got == {(105 + i, 5.0 + i) for i in range(5)}
     # scan on the evolved column: old files carry no score stats in the
     # sidecar (NULL mn) → kept; new files prune by range; results exact.
-    # NOTE scan() itself plans without mergeSchema by default, so probe
-    # via merge_schema=True
-    out = lake.scan("t", [("score", ">=", 5.0)], merge_schema=True)
+    out = lake.scan("t", [("score", ">=", 5.0)])
     assert {(r.id, r.score) for r in out.collect()} == got
     assert lake.last_scan_files[0] <= lake.last_scan_files[1]
 
 
-def test_fully_pruned_merge_schema_scan_on_evolved_column(spark, lake):
+def test_fully_pruned_scan_on_evolved_column(spark, lake):
     """A scan that prunes every file must return the typed empty frame
-    even when a predicate references an evolved column the pinned
-    manifest schema predates (the residual filter would otherwise raise
-    on the manifest-schema empty frame)."""
+    when a predicate references a column an append added (the residual
+    filter needs that column in the empty frame's schema)."""
     lake.create(_df(spark, [(i, f"v{i}") for i in range(10)]), "t")
     lake.append(
         spark.createDataFrame(
@@ -430,7 +524,6 @@ def test_fully_pruned_merge_schema_scan_on_evolved_column(spark, lake):
     out = lake.scan(
         "t",
         [("id", ">", 10_000), ("score", ">=", 1.0)],
-        merge_schema=True,
     )
     assert out.count() == 0
     assert lake.last_scan_files[0] == 0
@@ -705,8 +798,8 @@ def test_full_json_checkpoint_from_older_writers_still_resolves(
 def test_scan_unknown_column_raises_consistently(spark, lake):
     """Round-13 advisor: a typo'd predicate column must raise whether or
     not other conjuncts prune every file — not silently return empty in
-    the fully-pruned case.  merge_schema=True keeps the evolved-column
-    pass-through."""
+    the fully-pruned case.  A column an append added is in the schema,
+    so it passes."""
     lake.create(_df(spark, [(i, f"v{i}") for i in range(10)]), "t")
     with pytest.raises(PipelineRunError, match="no_such_col"):
         lake.scan("t", [("id", ">", 10_000), ("no_such_col", "=", 1)])
@@ -714,15 +807,14 @@ def test_scan_unknown_column_raises_consistently(spark, lake):
         lake.scan("t", [("id", ">=", 0), ("no_such_col", "=", 1)])
     with pytest.raises(PipelineRunError, match="no_such_col"):
         lake.scan("t", [("or", [[("no_such_col", "=", 1)], [("id", "=", 1)]])])
-    # evolved column, merge_schema=True: still passes through (the
-    # column exists only in files newer than the manifest schema)
+    # evolved column: the append widened the manifest schema
     lake.append(
         spark.createDataFrame(
             [(100, "w", 7)], "id bigint, v string, evolved bigint"
         ),
         "t",
     )
-    out = lake.scan("t", [("evolved", "=", 7)], merge_schema=True)
+    out = lake.scan("t", [("evolved", "=", 7)])
     assert {r.id for r in out.collect()} == {100}
 
 

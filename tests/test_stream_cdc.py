@@ -197,6 +197,23 @@ def test_schema_has_meta_columns(spark, lake):
     assert stream.isStreaming
 
 
+def test_widened_table_streams_the_added_column(spark, lake):
+    """An append that adds a column widens the manifest schema the
+    stream takes its schema from: the feed carries ``score``, NULL for
+    the rows of v1."""
+    lake.create(_df(spark, 0, 5), "t")
+    lake.append(
+        _df(spark, 5, 8).selectExpr("*", "CAST(id AS DOUBLE) * 1.5 AS score"),
+        "t",
+    )
+    got = _run_to_memory(read_changes_stream(spark, lake.root, "t"))
+    assert got.columns == ["id", "v", "score", "_change_type", "_commit_version"]
+    rows = {(r.id, r.score, r._commit_version) for r in got.collect()}
+    assert rows == {(i, None, 1) for i in range(5)} | {
+        (i, i * 1.5, 2) for i in range(5, 8)
+    }
+
+
 def test_planner_memo_is_bounded(spark, lake):
     """Round-13 advisor: the reader's resolved-file-list memo must not
     grow one O(table) entry per full-manifest version crossed — a
