@@ -278,7 +278,7 @@ class ParquetLake:
             df = _zorder_cluster(df, zorder_by, target_files)
         else:
             df = df.coalesce(target_files)
-        self._commit_rewrite(df, table, partition_by=parts or None)
+        self._swap_in(df, table, partition_by=parts or None)
         return before
 
     def upsert(
@@ -296,7 +296,7 @@ class ParquetLake:
         parts = partition_by or self.partition_columns(table)
         existing = self.read(table)
         merged = upsert_frames(df, existing, keys, check_keys=False)
-        self._commit_rewrite(merged, table, partition_by=parts or None)
+        self._swap_in(merged, table, partition_by=parts or None)
 
     def delete(
         self,
@@ -326,7 +326,7 @@ class ParquetLake:
         # shape scanned the table twice just to subtract (round-8 ADVICE)
         n_deleted = existing.join(k, keys, "left_semi").count()
         kept = existing.join(k, keys, "left_anti")
-        self._commit_rewrite(kept, table, partition_by=parts or None)
+        self._swap_in(kept, table, partition_by=parts or None)
         return n_deleted
 
     def upsert_partitioned(
@@ -439,11 +439,7 @@ class ParquetLake:
         weaker-but-precise concurrency contract is documented on
         ``_swap_in``.
         """
-        if when_matched not in ("update_all", None):
-            raise WrongMethodError(f"unknown when_matched {when_matched!r}")
-        if when_not_matched not in ("insert_all", None):
-            raise WrongMethodError(f"unknown when_not_matched {when_not_matched!r}")
-        if when_matched is None and when_not_matched is None:
+        if not _merge_clauses(when_matched, when_not_matched):
             return  # no-op merge
         ensure_unique_keys(df, keys)
         if self._delta_merge(df, table, keys, when_matched, when_not_matched):
@@ -455,7 +451,7 @@ class ParquetLake:
             check_keys=False,
         )
         parts = self.partition_columns(table)
-        self._commit_rewrite(merged, table, partition_by=parts or None)
+        self._swap_in(merged, table, partition_by=parts or None)
 
     def _delta_merge(
         self,
@@ -488,14 +484,6 @@ class ParquetLake:
         return True
 
     # -- snapshot swap ---------------------------------------------------
-    def _commit_rewrite(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> None:
-        """Seam every full-rewrite path (upsert/delete/merge/compact)
-        lands on: the base lake snapshot-swaps; ``VersionedLake``
-        overrides this with an atomic manifest commit."""
-        self._swap_in(df, table, partition_by=partition_by)
-
     def _swap_in(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> None:
@@ -545,6 +533,18 @@ class ParquetLake:
             raise PipelineRunError(f"snapshot swap failed for table {table!r}")
         if had_old:
             fs.delete(old_path, True)
+
+
+def _merge_clauses(when_matched: str | None, when_not_matched: str | None) -> bool:
+    """Validate MERGE clauses: ``when_matched`` is ``"update_all"`` or
+    None, ``when_not_matched`` is ``"insert_all"`` or None, anything else
+    raises ``WrongMethodError``.  False when both are None: the merge
+    has nothing to do."""
+    if when_matched not in ("update_all", None):
+        raise WrongMethodError(f"unknown when_matched {when_matched!r}")
+    if when_not_matched not in ("insert_all", None):
+        raise WrongMethodError(f"unknown when_not_matched {when_not_matched!r}")
+    return when_matched is not None or when_not_matched is not None
 
 
 _Z_BITS = 16  # per-column range-bucket resolution of the Morton curve

@@ -53,10 +53,11 @@ the previous sidecar with Arrow kernels — so resolution walks at most
 ``checkpoint_interval`` files no matter how old the table is, and at
 10⁶ files a cold resolve is ~2 s / a scan plan ~0.1 s where a
 single-JSON checkpoint cost 13 s to parse before pruning even started.
-Full JSON manifests (``create``, rewrites, ``restore`` and tables
-written by older releases that checkpointed as full JSON) root a chain
-just as a sidecar does.  Manifests also carry per-file zone-map stats
-(min/max/null-count), which ``scan`` uses for read-side file skipping.
+Full JSON manifests (``create``, ``compact``, ``restore``, any commit
+that replaces every live file, and tables written by older releases
+that checkpointed as full JSON) root a chain just as a sidecar does.
+Manifests also carry per-file zone-map stats (min/max/null-count),
+which ``scan`` uses for read-side file skipping.
 
 Every write reads the table state it builds on ONCE — the raw manifest
 of its expected version (:meth:`VersionedLake._snapshot`) — and hands
@@ -71,6 +72,7 @@ import json
 import math
 import time
 import uuid
+from collections.abc import Callable
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,7 +85,11 @@ from df_to_azure_spark.exceptions import (
     ConcurrentWriteError,
     PipelineRunError,
 )
-from df_to_azure_spark.operators.lake import ParquetLake, _zorder_cluster
+from df_to_azure_spark.operators.lake import (
+    ParquetLake,
+    _merge_clauses,
+    _zorder_cluster,
+)
 from df_to_azure_spark.operators.upsert import upsert_frames
 
 __all__ = ["VersionedLake"]
@@ -571,11 +577,13 @@ def _resolved_count(m: dict) -> int:
 class VersionedLake(ParquetLake):
     """Drop-in ``ParquetLake`` with atomic versioned-manifest commits.
 
-    Inherits the row-level algebra (``upsert``/``delete``/``merge``/
-    ``compact`` bodies) from the base class through the
-    ``_commit_rewrite`` seam and replaces every physical-layout concern:
-    reads resolve through manifests, writes stage immutable files and
-    commit by one atomic rename.  Extra surface over the base lake:
+    Keeps the base class's verbs and replaces every physical-layout
+    concern: reads resolve through manifests, writes stage immutable
+    files and commit by one atomic rename.  The keyed verbs
+    (``upsert``, ``merge``/``merge_keyed``, keyed ``delete``) share one
+    path, :meth:`_keyed_write`, which reads and rewrites only the files
+    whose zone maps meet the delta's key envelope.  Extra surface over
+    the base lake:
     ``versions``/``current_version``, time-travel ``read(version=...)``,
     ``has_batch`` + ``batch_id`` idempotence markers, and a
     retention-based ``vacuum(keep_last=...)``.  One difference: the
@@ -602,7 +610,6 @@ class VersionedLake(ParquetLake):
         # and ~2 s to load, with scan() pruning running as Arrow
         # kernels over the stat columns instead of a Python dict walk.
         self.checkpoint_interval = checkpoint_interval
-        self._read_version: dict[str, int] = {}
         self._pending_batch: str | None = None
         # raw + resolved manifest caches: manifests are immutable once
         # committed, so cached entries never go stale; bounded below
@@ -982,10 +989,9 @@ class VersionedLake(ParquetLake):
             raise PipelineRunError(
                 f"lake table {table!r} does not exist under {self.root}"
             )
-        m = self.resolve_manifest(table, v)
-        if version is None:
-            self._read_version[table] = v
-        return self._read_files(table, v, m["files"])
+        return self._read_files(
+            table, v, self.resolve_manifest(table, v)["files"]
+        )
 
     def _read_files(
         self, table: str, version: int, rels: list[str]
@@ -1991,9 +1997,10 @@ class VersionedLake(ParquetLake):
         declares (``partition_by``, ``dict_columns``, ``bloom_columns``
         / ``bloom_bits``).  Returns their table-relative paths, the
         frame's schema JSON and the staged files' zone-map stats keyed
-        by those paths.  Until a manifest references them the files are
-        invisible orphans — a crash here changes nothing a reader can
-        see."""
+        by those paths; a part-file its stats prove empty is left out
+        unless the whole frame is.  Until a manifest references them the
+        files are invisible orphans — a crash here changes nothing a
+        reader can see."""
         partition_by = list(snap.get("partition_by") or [])
         dict_columns = list(snap.get("dict_columns") or [])
         bcols = list(snap.get("bloom_columns") or [])
@@ -2031,9 +2038,30 @@ class VersionedLake(ParquetLake):
         files_base = self.files_dir(table)
         rels: list[str] = []
         staged_stats: dict[str, dict] = {}
-        consumed: set[str] = set()
-        fallback: list[str] = []
+        # stats are keyed by the RAW on-disk path: the aggregation's keys
+        # are the URI unquoted exactly once, which IS the on-disk
+        # (hive-escaped) name — unquoting again here would double-decode
+        # escaped partition values (e.g. 'a%3Ab' → 'a:b').  When every
+        # stats key names a staged file, a file without an entry is one
+        # the aggregation saw no row of.  Otherwise the decoding broke,
+        # and a file without an entry may be a live one: it is kept
+        # without stats (pruning lost, no row lost), never as rows:0,
+        # which every scan prunes
+        if raw_stats is not None and set(raw_stats) <= set(staged):
+            raw_stats = {
+                k: raw_stats.get(k) or {"rows": 0, "cols": {}} for k in staged
+            }
+        # a part-file with no row beside files with rows (Spark writes one
+        # for an empty first task) stays in the stage, deleted below: no
+        # keyed rewrite would ever replace it.  An empty frame keeps its
+        # file, so an empty table still holds one file of its schema
+        has_rows = raw_stats is not None and any(
+            st["rows"] for st in raw_stats.values()
+        )
         for raw_key, src in staged.items():
+            s = None if raw_stats is None else raw_stats.get(raw_key)
+            if has_rows and s is not None and not s["rows"]:
+                continue
             cut = raw_key.rfind("/") + 1
             rel_prefix = raw_key[:cut]
             rel = f"{rel_prefix}{cid}-{raw_key[cut:]}"
@@ -2044,24 +2072,8 @@ class VersionedLake(ParquetLake):
                     f"staging rename failed for table {table!r}"
                 )
             rels.append(f"files/{rel}")
-            if raw_stats is None:
-                continue
-            # keyed by the RAW on-disk path: the aggregation's keys are
-            # the URI unquoted exactly once, which IS the on-disk
-            # (hive-escaped) name — unquoting again here would
-            # double-decode escaped partition values (e.g. 'a%3Ab' →
-            # 'a:b') and mis-file every such file as rows:0.
-            s = raw_stats.get(raw_key)
             if s is None:
-                # absent from the aggregation: either a genuinely
-                # zero-row part file, or the URI-decoding assumption
-                # above broke — reconciled below (a rows:0 entry is
-                # PRUNE-ALWAYS, so a mis-keyed live file must not get
-                # one)
-                s = {"rows": 0, "cols": {}}
-                fallback.append(f"files/{rel}")
-            else:
-                consumed.add(raw_key)
+                continue
             bf = raw_blooms.get(raw_key)
             if bf:
                 s = dict(s)
@@ -2073,14 +2085,6 @@ class VersionedLake(ParquetLake):
                     for seg in rel_prefix.rstrip("/").split("/")
                 )
             staged_stats[f"files/{rel}"] = s
-        if raw_stats is not None and fallback and set(raw_stats) - consumed:
-            # reconciliation failed: some aggregation rows matched no
-            # renamed part-file, so the rows:0 fallbacks above are NOT
-            # verifiably empty — they may be live files the key-decode
-            # mis-filed.  Degrade to stats-less keep (pruning lost, no
-            # row can be lost) instead of prune-always silent row loss.
-            for rel in fallback:
-                staged_stats.pop(rel, None)
         fs.delete(stage_path, True)
         return sorted(rels), df.schema.json(), staged_stats
 
@@ -2252,16 +2256,24 @@ class VersionedLake(ParquetLake):
         the O(delta) JSON commit plus a columnar parquet sidecar (built
         by ADVANCING the previous sidecar with Arrow kernels, so even
         the checkpoint's cost never re-serializes the table as JSON).
-        A version with no predecessor is a full JSON manifest.  Either
-        way the resolution chain stays bounded and commit cost stays
-        proportional to the write, not the table.  A sidecar write that
-        fails AFTER the JSON commit is non-fatal (Delta's checkpoint
-        contract): readers fall through to the previous root with a
-        longer — still bounded — walk, and the next checkpoint heals
-        the chain."""
-        if expected_version is None:
+        A version with no predecessor, or one whose ``remove`` is every
+        live file, is a full JSON manifest: it lists no more than its
+        own adds, and it roots a new chain, so a reader resolves it in
+        one read instead of walking back.  Either way the resolution
+        chain stays bounded and commit cost stays proportional to the
+        write, not the table.  A sidecar write that fails AFTER the JSON
+        commit is non-fatal (Delta's checkpoint contract): readers fall
+        through to the previous root with a longer — still bounded —
+        walk, and the next checkpoint heals the chain."""
+        # removes are always drawn from the live list, so a remove-set
+        # as large as it is the whole of it
+        if expected_version is None or (
+            remove
+            and len(set(remove))
+            == _resolved_count(self.resolve_manifest(table, expected_version))
+        ):
             return self._commit(
-                table, sorted(set(add)), snap, schema_json, None,
+                table, sorted(set(add)), snap, schema_json, expected_version,
                 batch_ids, stats=stats, op=op,
             )
         n = expected_version + 1
@@ -2502,27 +2514,6 @@ class VersionedLake(ParquetLake):
                 last_err = e
         raise last_err  # type: ignore[misc]
 
-    def _commit_rewrite(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> None:
-        """Full-rewrite commit (the seam ``upsert``/``delete``/``merge``/
-        ``compact`` land on): the OCC expected version is the version
-        the rewrite READ (pinned by ``read``), so an interleaved commit
-        makes this one fail instead of silently undoing it — the
-        lost-update protection a snapshot swap cannot give."""
-        expected = self._read_version.get(table)
-        if expected is None:
-            expected = self.current_version(table)
-        snap = self._snapshot(table, expected)
-        layout = {
-            **snap, "partition_by": partition_by, "uniform_schema": True
-        }
-        files, schema, stats = self._stage_files(df, table, layout)
-        self._commit(
-            table, files, layout, schema, expected,
-            self._carry_batches(snap, None), stats=stats, op="rewrite",
-        )
-
     def compact(
         self,
         table: str,
@@ -2532,17 +2523,27 @@ class VersionedLake(ParquetLake):
         """Same contract as the base ``compact`` (returns the file count
         before), but the old files stay on disk until ``vacuum`` — a
         reader of any retained version keeps working through the
-        rewrite."""
-        df = self.read(table)
-        m = self.resolve_manifest(table, self._read_version[table])
-        before = _resolved_count(m)
-        parts = m.get("partition_by")
+        rewrite.  The commit is a full manifest against the version
+        read, so an interleaved commit fails this one."""
+        v = self.current_version(table)
+        if v is None:
+            raise PipelineRunError(
+                f"lake table {table!r} does not exist under {self.root}"
+            )
+        snap = self._snapshot(table, v)
+        m = self.resolve_manifest(table, v)
+        df = self._read_files(table, v, m["files"])
         if zorder_by:
             df = _zorder_cluster(df, zorder_by, target_files)
         else:
             df = df.coalesce(target_files)
-        self._commit_rewrite(df, table, partition_by=parts or None)
-        return before
+        layout = {**snap, "uniform_schema": True}
+        files, schema, stats = self._stage_files(df, table, layout)
+        self._commit(
+            table, files, layout, schema, v,
+            self._carry_batches(snap, None), stats=stats, op="compact",
+        )
+        return _resolved_count(m)
 
     def upsert_partitioned(
         self,
@@ -2717,6 +2718,32 @@ class VersionedLake(ParquetLake):
         )
         return len(candidates)
 
+    def upsert(
+        self,
+        df: DataFrame,
+        table: str,
+        keys: list[str],
+        partition_by: list[str] | None = None,
+    ) -> None:
+        """Keyed upsert (the reference's ``export.py:362-404``): rows of
+        ``df`` replace the table's rows with the same key, the rest are
+        inserted.  Runs on :meth:`_keyed_write`, so only the files whose
+        zone maps meet the delta's key envelope are read and rewritten,
+        and a delta whose envelope covers every file commits a full
+        manifest.  Keys must be unique and non-NULL in ``df`` (a NULL
+        key never matches, so a replay would insert its row again);
+        either violation raises before any write.  ``partition_by`` is
+        accepted for the base signature: the table's declared layout
+        wins, as for ``append``.  The commit's history label is
+        ``merge``."""
+        ensure_unique_keys(df, keys)
+        self._keyed_write(
+            table, df, keys,
+            lambda delta, affected: upsert_frames(
+                delta, affected, keys, check_keys=False, sort=False
+            ),
+        )
+
     def merge_keyed(
         self,
         df: DataFrame,
@@ -2725,34 +2752,112 @@ class VersionedLake(ParquetLake):
         when_matched: str | None = "update_all",
         when_not_matched: str | None = "insert_all",
     ) -> int:
-        """Row-level keyed MERGE on ANY versioned table — no partition
-        requirement (the gap ``upsert_partitioned`` left; reference
-        anchor: the staged SQL MERGE flow ``/root/reference/df_to_azure/
-        db.py:20-53`` — same clause semantics as ``merge_frames``).
+        """Keyed MERGE with ``ParquetLake.merge``'s clauses (reference
+        anchor: the staged SQL MERGE flow ``db.py:20-53``; same clause
+        semantics as ``merge_frames``).  An unknown clause raises
+        ``WrongMethodError``, and both clauses None is a no-op with no
+        commit.
 
-        Pruning-bounded rewrite: one small aggregation takes the
-        delta's per-key-column min/max, and only files whose zone maps
-        intersect that key envelope are read and rewritten — on a
-        key-clustered table a small delta touches a handful of files
-        out of millions, everything else carries verbatim through the
-        O(delta) commit.  This is sound because a file pruned on any
-        key column's range provably contains no row matching any delta
-        key.  Insert-only merges never rewrite at all: unmatched delta
-        rows stage as NEW files (append shape).  The commit is
-        remove+add, so the CDC feed emits the delete side of every
-        rewritten file.
+        Runs on :meth:`_keyed_write`: on a key-clustered table a small
+        delta rewrites a handful of files out of millions, and every
+        other file carries verbatim through the O(delta) commit.
+        Insert-only merges rewrite nothing: the unmatched delta rows
+        stage as NEW files (append shape).  The commit is remove+add, so
+        the CDC feed emits the delete side of every rewritten file.
 
-        Delta keys must be non-NULL (SQL ``MERGE ON k = k`` never
-        matches NULL, and a NULL key is invisible to range pruning) —
-        violations raise before any write.  Returns the number of
-        files rewritten; ``last_rewrite_files = (0, rewritten,
+        Delta keys must be unique and non-NULL (SQL ``MERGE ON k = k``
+        never matches NULL, and a NULL key is invisible to range
+        pruning); violations raise before any write.  Returns the number
+        of files rewritten; ``last_rewrite_files = (0, rewritten,
         carried)``."""
         from df_to_azure_spark.operators.upsert import (
             check_same_columns,
             merge_frames,
         )
 
+        if not _merge_clauses(when_matched, when_not_matched):
+            return 0
         ensure_unique_keys(df, keys)
+        if when_matched is None:
+            # existing rows are untouched by contract: stage ONLY the
+            # unmatched delta rows, an append-shaped commit
+            def inserts(delta: DataFrame, affected: DataFrame) -> DataFrame:
+                check_same_columns(delta, affected)
+                return delta.join(
+                    affected.select(*keys).dropDuplicates(keys),
+                    keys,
+                    "left_anti",
+                )
+
+            return self._keyed_write(table, df, keys, inserts, replace=False)
+        return self._keyed_write(
+            table, df, keys,
+            lambda delta, affected: merge_frames(
+                delta, affected, keys, when_matched, when_not_matched,
+                check_keys=False,
+            ),
+        )
+
+    # the base lake's MERGE verb; on a versioned table it is merge_keyed
+    merge = merge_keyed
+
+    def delete(
+        self,
+        table: str,
+        keys_df: DataFrame,
+        keys: list[str],
+        partition_by: list[str] | None = None,
+    ) -> int:
+        """Keyed row deletion (the base ``delete``'s contract): rows whose
+        key tuple appears in ``keys_df`` are removed, and the number of
+        rows deleted is returned.  Runs on :meth:`_keyed_write`, so only
+        the files the key envelope meets are read; a key set that
+        matches no row commits nothing.  NULL keys never match (SQL join
+        semantics), so they are dropped, not refused.  ``partition_by``
+        is accepted for the base signature; the table's layout wins."""
+        n_deleted = 0
+
+        def survivors(k: DataFrame, affected: DataFrame) -> DataFrame | None:
+            nonlocal n_deleted
+            # the audit count reads only the candidate files
+            n_deleted = affected.join(k, keys, "left_semi").count()
+            return affected.join(k, keys, "left_anti") if n_deleted else None
+
+        self._keyed_write(
+            table,
+            keys_df.select(*keys).dropDuplicates(keys).dropna(),
+            keys,
+            survivors,
+            op="delete",
+        )
+        return n_deleted
+
+    def _keyed_write(
+        self,
+        table: str,
+        df: DataFrame,
+        keys: list[str],
+        rewrite: Callable[[DataFrame, DataFrame], DataFrame | None],
+        replace: bool = True,
+        op: str = "merge",
+    ) -> int:
+        """The one keyed-write path.  ``df``'s columns take the table's
+        types, as in a SQL MERGE into a typed table: carried files keep
+        them, so the staged files must too.  ONE aggregate over ``df``
+        then takes its key envelope (per-key-column min/max) and
+        NULL-key count; a NULL key raises before any write.  The live
+        files whose zone maps meet the envelope are the candidates,
+        sound because a file pruned on any key column's range holds no
+        row matching any key of ``df``.  ``rewrite(df, affected)`` gets
+        the typed ``df`` and the read of the candidates and returns the
+        frame to stage (None: commit nothing); the staged files replace
+        the candidates, or with ``replace=False`` are added beside them.
+        The commit is against the version the candidates came from, so
+        an interleaved commit fails this one (``ConcurrentWriteError``);
+        one that replaces every live file is a full manifest
+        (:meth:`_commit_delta`).  An empty ``df`` commits nothing.
+        Returns the number of files replaced and sets
+        ``last_rewrite_files = (0, replaced, carried)``."""
         v = self.current_version(table)
         if v is None:
             raise PipelineRunError(
@@ -2760,10 +2865,19 @@ class VersionedLake(ParquetLake):
             )
         snap = self._snapshot(table, v)
         m = self.resolve_manifest(table, v)
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        check_same_columns(df, self.spark.createDataFrame([], schema))
-        # the delta's key envelope and its NULL-key count: ONE tiny
-        # aggregation, model-sized collect (2 values per key column)
+        types = {
+            f.name: f.dataType
+            for f in T.StructType.fromJson(json.loads(m["schema"])).fields
+        }
+        df = df.select(
+            *[
+                F.col(f"`{f.name}`").cast(types[f.name]).alias(f.name)
+                if f.name in types
+                and types[f.name].simpleString() != f.dataType.simpleString()
+                else F.col(f"`{f.name}`")
+                for f in df.schema.fields
+            ]
+        )
         aggs = [
             F.count(
                 F.when(F.expr(" OR ".join(f"`{k}` IS NULL" for k in keys)), 1)
@@ -2775,70 +2889,39 @@ class VersionedLake(ParquetLake):
         env = df.agg(*aggs).collect()[0]
         if env["__null_keys"]:
             raise PipelineRunError(
-                f"merge_keyed: delta contains NULL values in key(s) "
-                f"{keys!r}; MERGE keys must be non-NULL"
+                f"keyed write: delta contains NULL values in key(s) "
+                f"{keys!r}; keys must be non-NULL"
             )
+        self.last_rewrite_files = (0, 0, _resolved_count(m))
         if env[f"mn__{keys[0]}"] is None:
-            self.last_rewrite_files = (0, 0, _resolved_count(m))
-            return 0  # empty delta: nothing to update or insert
-        preds = self._normalize_predicates(
-            [
-                (k, "between", (env[f"mn__{k}"], env[f"mx__{k}"]))
-                for k in keys
-            ]
+            return 0  # empty delta: nothing to write
+        candidates, total = self._prune(
+            m,
+            self._normalize_predicates(
+                [
+                    (k, "between", (env[f"mn__{k}"], env[f"mx__{k}"]))
+                    for k in keys
+                ]
+            ),
         )
-        candidates, total = self._prune(m, preds)
-        if when_matched is None:
-            # insert-only: existing rows are untouched by contract, so
-            # stage ONLY the unmatched delta rows as new files — an
-            # append-shaped commit, zero rewrites
-            affected = self._read_files(table, v, candidates)
-            inserts = df.join(
-                affected.select(*keys).dropDuplicates(keys),
-                keys,
-                "left_anti",
-            )
-            new_files, _, new_stats = self._stage_files(inserts, table, snap)
-            self.last_rewrite_files = (0, 0, total)
-            self._commit_delta(
-                table,
-                new_files,
-                [],
-                snap,
-                m["schema"],
-                v,
-                self._carry_batches(snap, None),
-                stats=new_stats,
-                op="merge",
-            )
+        staged = rewrite(df, self._read_files(table, v, candidates))
+        if staged is None:
             return 0
-        affected = self._read_files(table, v, candidates)
-        merged = merge_frames(
-            df,
-            affected,
-            keys,
-            when_matched=when_matched,
-            when_not_matched=when_not_matched,
-            check_keys=False,
-        )
-        new_files, _, new_stats = self._stage_files(merged, table, snap)
-        self.last_rewrite_files = (
-            0,
-            len(candidates),
-            total - len(candidates),
-        )
+        removed = candidates if replace else []
+        new_files, _, new_stats = self._stage_files(staged, table, snap)
+        self.last_rewrite_files = (0, len(removed), total - len(removed))
         self._commit_delta(
             table,
             new_files,
-            candidates,
+            removed,
             snap,
             m["schema"],
             v,
             self._carry_batches(snap, None),
             stats=new_stats,
-            op="merge",
+            op=op,
         )
-        return len(candidates)
+        return len(removed)
 
     def history(self, table: str) -> DataFrame:
         """Commit history as a DataFrame — ``(version, op, committed_ms,

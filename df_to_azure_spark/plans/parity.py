@@ -533,7 +533,7 @@ def w8_table_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert rewrites it (v2), ``restore(1)`` republishes v1's file list
     as v3 WITHOUT moving data — and the read must hash-equal the
     original table exactly (the oracle is the untouched source).  Also
-    asserts history labels the three commits create/rewrite/restore."""
+    asserts history labels the three commits create/merge/restore."""
     import os
     import shutil
     import tempfile
@@ -553,7 +553,7 @@ def w8_table_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake.upsert(_upsert_delta(customer), "customer", ["c_custkey"])
     lake.restore("customer", 1)
     ops = [r.op for r in lake.history("customer").collect()]
-    if ops != ["create", "rewrite", "restore"]:
+    if ops != ["create", "merge", "restore"]:
         raise PipelineRunError(f"unexpected history ops: {ops}")
     return lake.read("customer")
 

@@ -20,6 +20,7 @@ import signal
 import subprocess
 import sys
 import tempfile
+import time
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
@@ -53,6 +54,9 @@ _CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 # Life bound of the detached process that builds a missing archive (a JVM
 # start, three facade calls and the dump: about 45 s on 4 vCPUs).
 _BUILD_TIMEOUT_S = 300
+# Age past which a build removes the archives of other keys: a changed JDK
+# or Spark jar list leaves its old archive (about 170 MB) unmapped for good.
+_STALE_ARCHIVE_S = 7 * 24 * 3600
 
 
 def _archive_prefix(spark_home: str, cache: str) -> str:
@@ -169,7 +173,8 @@ def _build_archive() -> None:
     pandas frame in a versioned lake by create, append and upsert, end
     the JVM, and publish the dump if the JVM exited with status 0.  One
     build runs per cache at a time, under a lock on the cache directory;
-    a temp file that a killed build left behind is removed first."""
+    a temp file that a killed build left behind is removed first, and so
+    are other keys' archives older than ``_STALE_ARCHIVE_S``."""
     import fcntl
 
     import pandas as pd
@@ -191,6 +196,7 @@ def _build_archive() -> None:
         return  # built meanwhile
     for stale in glob.glob(glob.escape(prefix) + "*.tmp"):
         os.remove(stale)
+    _remove_stale_archives(prefix)
     tmp = f"{prefix}{os.getpid()}.tmp"
     spark = _start(
         _builder("df_to_azure_spark", 1, 1, {"spark.driver.memory": "1g"}),
@@ -215,6 +221,18 @@ def _build_archive() -> None:
         finally:
             with contextlib.suppress(FileNotFoundError):
                 os.remove(tmp)
+
+
+def _remove_stale_archives(prefix: str) -> None:
+    """Remove the archives of keys other than ``prefix``'s that were
+    last written more than ``_STALE_ARCHIVE_S`` ago."""
+    cutoff = time.time() - _STALE_ARCHIVE_S
+    cache = glob.escape(os.path.dirname(prefix))
+    for path in glob.glob(os.path.join(cache, "driver-*.jsa")):
+        if not path.startswith(prefix):
+            with contextlib.suppress(FileNotFoundError):
+                if os.path.getmtime(path) < cutoff:
+                    os.remove(path)
 
 
 def _builder(

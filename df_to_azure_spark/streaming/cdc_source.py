@@ -396,8 +396,9 @@ WHERE 1 = 0
 
 def stream_cdc_rewrite_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DELETE side of the CDC contract, hash-gated: customer is
-    committed (v1) then rewritten by a keyed upsert (v2).  A full
-    rewrite restages every file, so the v1→v2 change feed is exactly
+    committed (v1) then rewritten by a keyed upsert (v2).  The delta's
+    key envelope meets every file, so the upsert restages every file
+    and the v1→v2 change feed is exactly
     (delete = the whole pre-upsert table) ∪ (insert = the whole
     post-upsert table) — both SQL-stateable, so the streamed feed
     (starting_version=1, skipping the snapshot) diffs against that

@@ -141,7 +141,10 @@ def make_lake_batch_handler(
     lake twin of :func:`make_batch_handler`, same replay contract:
 
     - ``id_field`` given → each batch applies as a keyed lake upsert,
-      idempotent under replay by construction;
+      idempotent under replay by construction.  On a
+      :class:`~df_to_azure_spark.operators.manifest.VersionedLake` a
+      batch with a NULL key raises before any write: a NULL key never
+      matches, so a replay would insert its row again;
     - no keys, plain ``ParquetLake`` → batches APPEND, guarded by a
       per-table marker-file ledger (``_batches/<batch_id>`` under the
       table dir — one filesystem stat per batch, no data read).  The

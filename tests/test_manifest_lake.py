@@ -46,7 +46,7 @@ def test_append_and_time_travel(spark, lake):
     assert {r.id for r in lake.read("t", version=1).collect()} == {1}
 
 
-def test_upsert_inherited_path_commits_new_version(spark, lake):
+def test_upsert_commits_new_version(spark, lake):
     lake.create(_df(spark, [(1, "a"), (2, "b")]), "t")
     lake.upsert(_df(spark, [(2, "B"), (3, "c")]), "t", ["id"])
     assert lake.current_version("t") == 2
@@ -67,7 +67,7 @@ def test_crash_between_data_write_and_manifest_commit(spark, lake, monkeypatch):
     def boom(self, *a, **k):
         raise RuntimeError("simulated crash before manifest rename")
 
-    monkeypatch.setattr(VersionedLake, "_commit", boom)
+    monkeypatch.setattr(VersionedLake, "_publish_manifest", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         lake.upsert(_df(spark, [(1, "A"), (2, "b")]), "t", ["id"])
     monkeypatch.undo()
@@ -95,7 +95,8 @@ def test_rewrite_occ_conflict_raises_and_table_unharmed(spark, lake, monkeypatch
     lake2 = VersionedLake(spark, root)
     lake.create(_df(spark, [(1, "a"), (2, "b")]), "t")
 
-    orig = VersionedLake._commit
+    # intercept at the publish seam, below the full and delta commits
+    orig = VersionedLake._publish_manifest
     state = {"fired": False}
 
     def racy(self, *a, **k):
@@ -104,7 +105,7 @@ def test_rewrite_occ_conflict_raises_and_table_unharmed(spark, lake, monkeypatch
             lake2.upsert(_df(spark, [(2, "THEIRS")]), "t", ["id"])
         return orig(self, *a, **k)
 
-    monkeypatch.setattr(VersionedLake, "_commit", racy)
+    monkeypatch.setattr(VersionedLake, "_publish_manifest", racy)
     with pytest.raises(ConcurrentWriteError):
         lake.upsert(_df(spark, [(1, "MINE")]), "t", ["id"])
     monkeypatch.undo()
@@ -167,6 +168,18 @@ def test_publish_with_audit_versioned_batch_idempotent(spark, lake):
     publish_with_audit(lake, batch, "t", rules, method="append", batch_id="B1")
     assert lake.read("t").count() == 3
     assert lake.has_batch("t", "B1")
+    # an audited upsert records its batch id in its own commit, and a
+    # retry of it commits nothing
+    for _ in range(2):
+        publish_with_audit(
+            lake, _df(spark, [(2, "B"), (4, "d")]), "t", rules,
+            method="upsert", id_field="id", batch_id="b1",
+        )
+    assert lake.versions("t") == [1, 2, 3]
+    m = lake._load_manifest("t", 3)
+    assert m["op"] == "merge" and m["batch_ids"] == ["B1", "b1"]
+    got = {(r.id, r.v) for r in lake.read("t").collect()}
+    assert got == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
 
 
 def test_compact_shrinks_files_keeps_data_and_history(spark, lake):
@@ -185,17 +198,33 @@ def test_compact_shrinks_files_keeps_data_and_history(spark, lake):
 
 
 def test_vacuum_retention_and_time_travel_boundary(spark, lake):
+    """After an upsert that carried a file (a delta commit), retention
+    rounds down to the chain root and every kept version still reads.
+    After one that replaced every file (a chain root), vacuum retires
+    the older versions and reclaims their files."""
     lake.create(_df(spark, [(1, "a")]), "t")
     lake.append(_df(spark, [(2, "b")]), "t")
-    lake.upsert(_df(spark, [(1, "A")]), "t", ["id"])
+    lake.upsert(_df(spark, [(1, "A")]), "t", ["id"])  # carries (2, "b")
+    removed = lake.vacuum("t", keep_last=1, older_than_ms=0)
+    assert not any(r.startswith("files/") for r in removed)
     assert lake.versions("t") == [1, 2, 3]
+    reads = {
+        v: {(r.id, r.v) for r in lake.read("t", version=v).collect()}
+        for v in (1, 2, 3)
+    }
+    assert reads == {
+        1: {(1, "a")},
+        2: {(1, "a"), (2, "b")},
+        3: {(1, "A"), (2, "b")},
+    }
+    lake.upsert(_df(spark, [(1, "A"), (2, "B")]), "t", ["id"])
     removed = lake.vacuum("t", keep_last=1, older_than_ms=0)
     assert any(r.startswith("_manifests/") for r in removed)
     assert any(r.startswith("files/") for r in removed)
-    assert lake.versions("t") == [3]
+    assert lake.versions("t") == [4]
     assert {(r.id, r.v) for r in lake.read("t").collect()} == {
         (1, "A"),
-        (2, "b"),
+        (2, "B"),
     }
     with pytest.raises(Exception):
         lake.read("t", version=1).collect()
@@ -237,7 +266,7 @@ def test_empty_create_reads_back_empty_with_schema(spark, lake):
     assert [f.name for f in out.schema.fields] == ["id", "v"]
 
 
-def test_delete_and_merge_inherit_versioned_commits(spark, lake):
+def test_keyed_delete_and_merge_commit_versions(spark, lake):
     lake.create(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), "t")
     n = lake.delete("t", _df(spark, [(2, "x")]), ["id"])
     assert n == 1 and lake.current_version("t") == 2
@@ -329,9 +358,8 @@ def test_rewrites_over_evolved_files_keep_the_added_column(spark, lake):
     """A rewrite restages every column of the files it reads: after an
     append added ``score``, a delete_where touching only the new file,
     and one touching old and new files together, keep the survivors'
-    scores; merge_keyed and the inherited full upsert refuse a delta
-    without ``score`` instead of dropping the column, and take a
-    full-width one."""
+    scores; merge_keyed and upsert refuse a delta without ``score``
+    instead of dropping the column, and take a full-width one."""
     # one file per commit, so each delete below rewrites whole files
     lake.create(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), "t")
     lake.append(
@@ -678,7 +706,7 @@ def test_restore_rolls_back_as_new_commit(spark, lake):
         (1, "a"), (2, "B2"), (3, "c"),
     }
     ops = {r.version: r.op for r in lake.history("t").collect()}
-    assert ops == {1: "create", 2: "rewrite", 3: "append", 4: "restore"}
+    assert ops == {1: "create", 2: "merge", 3: "append", 4: "restore"}
     # restoring a missing table fails loudly
     with pytest.raises(PipelineRunError):
         lake.restore("nope", 1)
@@ -713,8 +741,9 @@ def test_scan_in_predicate_prunes_and_matches(spark, lake):
 def test_file_changes_and_read_changes(spark, lake):
     """Manifest-derived change feed: appends surface as exact inserts
     with zero un-changed files read; a rewrite surfaces as file-level
-    delete+insert pairs (the documented granularity)."""
-    lake.create(_df(spark, [(1, "a")]), "t")
+    delete+insert pairs (the documented granularity): every row of the
+    rewritten file, the carried one too, and no row of another file."""
+    lake.create(_df(spark, [(1, "a"), (4, "d")]).coalesce(1), "t")
     lake.append(_df(spark, [(2, "b")]), "t")
     lake.append(_df(spark, [(3, "c")]), "t")
     added, removed = lake.file_changes("t", 1, 3)
@@ -722,11 +751,16 @@ def test_file_changes_and_read_changes(spark, lake):
     ch = lake.read_changes("t", 1, 3)
     got = {(r.id, r.v, r.change_type) for r in ch.collect()}
     assert got == {(2, "b", "insert"), (3, "c", "insert")}
-    # rewrite: whole-file replacement → carried rows appear as both
+    # rewrite: whole-file replacement → the carried row 4 appears as both
     lake.upsert(_df(spark, [(1, "A")]), "t", ["id"])
-    ch2 = {(r.id, r.change_type) for r in lake.read_changes("t", 3, 4).collect()}
-    assert (1, "insert") in ch2 and (1, "delete") in ch2
-    assert (2, "insert") in ch2 and (2, "delete") in ch2  # carried rows
+    ch2 = {
+        (r.id, r.v, r.change_type)
+        for r in lake.read_changes("t", 3, 4).collect()
+    }
+    assert ch2 == {
+        (1, "a", "delete"), (4, "d", "delete"),
+        (1, "A", "insert"), (4, "d", "insert"),
+    }
 
 
 def test_restore_sidecar_failure_degrades_not_raises(spark, lake, monkeypatch):
@@ -988,12 +1022,59 @@ def test_merge_keyed_clause_variants_and_guards(spark, lake):
             ["id"],
         )
     assert lake.current_version("t") == v
+    # ... and so are a versioned upsert's: a NULL key never matches, so
+    # a replay would insert its row again
+    with pytest.raises(PipelineRunError, match="NULL"):
+        lake.upsert(
+            spark.createDataFrame([(None, "n"), (8, "h")], "id bigint, v string"),
+            "t",
+            ["id"],
+        )
+    assert lake.current_version("t") == v
     # empty delta: no commit at all
     v = lake.current_version("t")
     assert lake.merge_keyed(
         spark.createDataFrame([], "id bigint, v string"), "t", ["id"]
     ) == 0
     assert lake.current_version("t") == v
+
+
+def test_merge_keyed_validates_clauses(spark, lake):
+    """merge_keyed takes ParquetLake.merge's clauses: an unknown clause
+    raises WrongMethodError, and both clauses None is a no-op that
+    commits nothing."""
+    from df_to_azure_spark.exceptions import WrongMethodError
+
+    lake.create(_df(spark, [(1, "a")]), "t")
+    delta = _df(spark, [(1, "A"), (9, "x")])
+    with pytest.raises(WrongMethodError, match="bogus"):
+        lake.merge_keyed(delta, "t", ["id"], when_matched="bogus")
+    with pytest.raises(WrongMethodError, match="bogus"):
+        lake.merge_keyed(delta, "t", ["id"], when_not_matched="bogus")
+    assert lake.merge_keyed(delta, "t", ["id"], None, None) == 0
+    assert lake.current_version("t") == 1
+    assert {(r.id, r.v) for r in lake.read("t").collect()} == {(1, "a")}
+
+
+def test_keyed_write_replacing_every_file_commits_a_chain_root(spark, lake):
+    """An upsert whose key envelope meets every live file commits a full
+    manifest (a new chain root); one that carries a file commits an
+    O(delta) entry.  A delta typed otherwise takes the table's types,
+    which the carried files keep."""
+    lake.create(_df(spark, [(i, "a") for i in range(4)]).coalesce(1), "t")
+    lake.append(_df(spark, [(10, "b")]), "t")
+    lake.upsert(_df(spark, [(1, "A")]), "t", ["id"])  # carries id 10's file
+    m3 = lake._load_manifest("t", 3)
+    assert m3["base"] == 2 and "files" not in m3
+    assert len(m3["remove"]) == 1 and lake.last_rewrite_files[2] == 1
+    lake.upsert(_df(spark, [(0, "Z"), (10, "B")]), "t", ["id"])
+    m4 = lake._load_manifest("t", 4)
+    assert "base" not in m4 and m4["op"] == "merge"
+    assert lake.last_rewrite_files[2] == 0
+    lake.upsert(spark.createDataFrame([(2, 7)], "id int, v bigint"), "t", ["id"])
+    assert lake._load_manifest("t", 5)["schema"] == m4["schema"]
+    got = {(r.id, r.v) for r in lake.read("t").collect()}
+    assert got == {(0, "Z"), (1, "A"), (2, "7"), (3, "a"), (10, "B")}
 
 
 def test_delete_where_occ_loses_to_interleaved_commit(spark, lake):

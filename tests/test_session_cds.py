@@ -288,3 +288,20 @@ def test_archive_key_follows_jar_size_and_mtime(tmp_path):
     os.utime(jar, ns=(0, 10**18))
     grown = session._archive_prefix(str(tmp_path), "c")
     assert len({key, touched, grown}) == 3
+
+
+def test_build_removes_stale_archives_of_other_keys(tmp_path):
+    """An archive of another key (a changed JDK or jar list) is never
+    mapped again, so a build removes it once it is older than the age
+    bound; a fresh one of another key and this key's own stay."""
+    prefix = str(tmp_path / "driver-aaaa-")
+    own = tmp_path / "driver-aaaa-4.jsa"
+    old = tmp_path / "driver-bbbb-4.jsa"
+    fresh = tmp_path / "driver-cccc-4.jsa"
+    for path in (own, old, fresh):
+        path.write_bytes(b"jsa!")
+    past = time.time() - session._STALE_ARCHIVE_S - 60
+    for path in (own, old):
+        os.utime(path, (past, past))
+    session._remove_stale_archives(prefix)
+    assert sorted(p.name for p in tmp_path.iterdir()) == [own.name, fresh.name]

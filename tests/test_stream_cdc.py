@@ -66,18 +66,19 @@ def test_append_only_stream_equals_batch(spark, lake):
 
 
 def test_rewrite_surfaces_delete_insert_pairs(spark, lake):
-    lake.create(_df(spark, 0, 50), "t")
+    lake.create(_df(spark, 0, 50).coalesce(2), "t")
     lake.upsert(_df(spark, 0, 5, tag="upd"), "t", ["id"])
     got = _run_to_memory(read_changes_stream(spark, lake.root, "t"))
     v2 = got.where("_commit_version = 2")
-    # the rewrite replaced whole files: old rows delete, merged insert
-    kinds = {
-        r._change_type: r["count"]
-        for r in v2.groupBy("_change_type").count().collect()
-    }
-    assert kinds["delete"] == 50 and kinds["insert"] == 50
-    upd = v2.where("_change_type = 'insert' AND id < 5")
-    assert {r.v for r in upd.collect()} == {f"upd{i}" for i in range(5)}
+    # the rewrite replaced whole files: every row of the file the key
+    # envelope met deletes, and inserts merged, carried rows included;
+    # the other file stays out of the feed
+    dels = {(r.id, r.v) for r in v2.where("_change_type = 'delete'").collect()}
+    ins = {(r.id, r.v) for r in v2.where("_change_type = 'insert'").collect()}
+    ids = {i for i, _ in dels}
+    assert set(range(5)) < ids < set(range(50))
+    assert dels == {(i, f"a{i}") for i in ids}
+    assert ins == {(i, f"upd{i}" if i < 5 else f"a{i}") for i in ids}
 
 
 def test_starting_version_skips_snapshot(spark, lake):
@@ -161,7 +162,7 @@ def test_stream_resumes_from_sidecar_only_root(spark, lake):
     checkpoint sidecar (no full JSON anywhere) — a stream starting at
     that version must still resolve deltas from it."""
     lake.checkpoint_interval = 5
-    lake.create(_df(spark, 0, 10), "t")
+    lake.create(_df(spark, 0, 10).coalesce(1), "t")
     for i in range(9):  # v2..v10; v5 and v10 are sidecar checkpoints
         lake.append(_df(spark, 10 + i, 11 + i), "t")
     lake.vacuum("t", keep_last=1, older_than_ms=0)
@@ -176,17 +177,16 @@ def test_stream_resumes_from_sidecar_only_root(spark, lake):
     )
     assert sorted(r.id for r in got.collect()) == list(range(100, 105))
     # a rewrite right after the sidecar root: delete side must resolve
-    # the pre-rewrite file list THROUGH the sidecar
+    # the pre-rewrite file list THROUGH the sidecar.  The key envelope
+    # meets only v1's file, which holds ids 0..9
     lake.upsert(_df(spark, 0, 3, tag="u"), "t", ["id"])
     got = _run_to_memory(
         read_changes_stream(spark, lake.root, "t", starting_version=11)
     )
-    n_live = lake.read("t").count()
-    ins = got.where("_change_type = 'insert'")
-    assert ins.count() == n_live  # full rewrite restages everything
-    a = ins.drop("_change_type", "_commit_version")
-    b = lake.read("t")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    rows = {(r.id, r.v, r._change_type) for r in got.collect()}
+    assert rows == {(i, f"a{i}", "delete") for i in range(10)} | {
+        (i, f"u{i}" if i < 3 else f"a{i}", "insert") for i in range(10)
+    }
 
 
 def test_schema_has_meta_columns(spark, lake):
@@ -226,14 +226,15 @@ def test_planner_memo_is_bounded(spark, lake):
     )
 
     # full manifests need resolves of v-1: every other commit is an
-    # upsert, whose full rewrite commits a full manifest (v3, v5, v7)
+    # upsert whose key envelope meets every live file, so it commits a
+    # full manifest (v3, v5, v7)
     lake.create(_df(spark, 0, 10), "t")
     for i in range(1, 7):
-        delta = _df(spark, 10 * i, 10 * i + 10)
         if i % 2:
-            lake.append(delta, "t")
+            lake.append(_df(spark, 10 * i, 10 * i + 10), "t")
         else:
-            lake.upsert(delta, "t", ["id"])
+            lake.upsert(_df(spark, 0, 10 * i + 10), "t", ["id"])
+    assert all("files" in lake._load_manifest("t", v) for v in (3, 5, 7))
     src = LakeCdcDataSource(
         options={"root": lake.root, "table": "t", "starting_version": "0"}
     )
