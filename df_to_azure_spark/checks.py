@@ -15,6 +15,7 @@ from df_to_azure_spark.exceptions import (
     DuplicateKeysError,
     EngineConfigError,
     MissingIdFieldError,
+    PipelineRunError,
     WrongMethodError,
 )
 
@@ -50,6 +51,22 @@ def ensure_unique_column_names(df: DataFrame) -> None:
         )
 
 
+def _duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
+    return (
+        df.select(*keys)
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .where(F.col("n") > 1)
+    )
+
+
+def _raise_duplicate_keys(df: DataFrame, keys: list[str]) -> None:
+    sample = [r.asDict() for r in _duplicate_keys(df, keys).limit(5).collect()]
+    raise DuplicateKeysError(
+        f"duplicate key values for id_field={keys}: e.g. {sample}"
+    )
+
+
 def ensure_unique_keys(df: DataFrame, keys: list[str]) -> None:
     """V2: upsert keys must be unique in the new data, checked BEFORE any
     write (reference ``utils.py:87-89``).  Distributed: a groupBy on the
@@ -57,17 +74,42 @@ def ensure_unique_keys(df: DataFrame, keys: list[str]) -> None:
     shuffle carries at most one row per distinct key, and ``isEmpty``
     stops at the first offending partition.
     """
-    dup = (
-        df.select(*keys)
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )
-    if not dup.isEmpty():
-        sample = [r.asDict() for r in dup.limit(5).collect()]
-        raise DuplicateKeysError(
-            f"duplicate key values for id_field={keys}: e.g. {sample}"
+    if not _duplicate_keys(df, keys).isEmpty():
+        _raise_duplicate_keys(df, keys)
+
+
+def key_envelope(
+    df: DataFrame, keys: list[str], unique: bool = True
+) -> dict[str, tuple] | None:
+    """V2 plus the NULL-key check and the key envelope of a keyed write,
+    from ONE aggregate: a ``groupBy(keys)`` (skipped when ``unique`` is
+    False) followed by a global aggregate of the group sizes, the
+    NULL-key groups and each key column's min/max.  A duplicate key
+    raises ``DuplicateKeysError`` (its sample rows are fetched only on
+    that path); a NULL key raises ``PipelineRunError``, because it never
+    matches and is invisible to range pruning.  Returns ``{key: (min,
+    max)}``, or None for an empty ``df``."""
+    cols = [F.col(f"`{k}`") for k in keys]
+    null_key = F.expr(" OR ".join(f"`{k}` IS NULL" for k in keys))
+    aggs = [F.count(F.when(null_key, 1)).alias("__null_keys")]
+    for k, c in zip(keys, cols):
+        aggs += [F.min(c).alias(f"mn__{k}"), F.max(c).alias(f"mx__{k}")]
+    if unique:
+        groups = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__n"))
+        aggs.append(F.max("__n").alias("__max_n"))
+        env = groups.agg(*aggs).collect()[0]
+        if (env["__max_n"] or 0) > 1:
+            _raise_duplicate_keys(df, keys)
+    else:
+        env = df.agg(*aggs).collect()[0]
+    if env["__null_keys"]:
+        raise PipelineRunError(
+            f"keyed write: delta contains NULL values in key(s) "
+            f"{keys!r}; keys must be non-NULL"
         )
+    if env[f"mn__{keys[0]}"] is None:
+        return None
+    return {k: (env[f"mn__{k}"], env[f"mx__{k}"]) for k in keys}
 
 
 def validate_required_options(options: dict, required: list[str]) -> None:

@@ -158,6 +158,38 @@ def upsert_procedure(
     return f"CREATE OR ALTER PROCEDURE {_bq(f'UPSERT_{table}')} AS\nBEGIN\n{body}\nEND;"
 
 
+def create_staging_statement(
+    table: str,
+    target_schema: str = "dbo",
+    staging_schema: str = "staging",
+    dialect: str = "tsql",
+) -> str:
+    """An empty ``staging.{table}`` with the target's own column types,
+    so the staged rows need no type inference of their own: T-SQL
+    ``SELECT TOP 0 * INTO``, postgres and mysql ``LIKE``, ANSI (Derby)
+    ``CREATE TABLE ... AS SELECT ... WITH NO DATA``.  The staging table
+    must not exist; drop it first (:func:`drop_staging_statement`)."""
+    if dialect == "tsql":
+        return (
+            f"SELECT TOP 0 * INTO {_bq(staging_schema)}.{_bq(table)} "
+            f"FROM {_bq(target_schema)}.{_bq(table)};"
+        )
+    if dialect == "postgres":
+        return (
+            f"CREATE TABLE {_dq(staging_schema)}.{_dq(table)} "
+            f"(LIKE {_dq(target_schema)}.{_dq(table)});"
+        )
+    if dialect == "mysql":
+        return (
+            f"CREATE TABLE {_tick(staging_schema)}.{_tick(table)} "
+            f"LIKE {_tick(target_schema)}.{_tick(table)};"
+        )
+    return (
+        f"CREATE TABLE {_plain(staging_schema)}.{_plain(table)} AS "
+        f"SELECT * FROM {_plain(target_schema)}.{_plain(table)} WITH NO DATA"
+    )
+
+
 def drop_staging_statement(
     table: str, staging_schema: str = "staging", dialect: str = "tsql"
 ) -> str:

@@ -47,15 +47,17 @@ def upsert_frames(
 ) -> DataFrame:
     """Row-level keyed upsert; see module docstring for the algebra.
 
-    The key-set of ``new`` is broadcast for the anti-join — correct
-    whenever the delta's distinct keys fit in executor memory (deltas
+    The key columns of ``new`` are broadcast for the anti-join — correct
+    whenever the delta's keys fit in executor memory (deltas
     are usually ≪ target).  ``check_keys=False`` skips the duplicate-key
     validation for callers that already ran it.
     """
     check_same_columns(new, existing)
     if check_keys:
         ensure_unique_keys(new, keys)
-    new_keys = F.broadcast(new.select(*keys).dropDuplicates(keys))
+    # an anti join's result does not depend on how often a key repeats
+    # on the right, so the key side needs no dedup shuffle
+    new_keys = F.broadcast(new.select(*keys))
     survivors = existing.join(new_keys, on=keys, how="left_anti")
     out = new.unionByName(survivors)
     if sort:
@@ -92,10 +94,10 @@ def merge_frames(
         ensure_unique_keys(new, keys)
     if when_matched and when_not_matched:
         return upsert_frames(new, existing, keys, sort=False, check_keys=False)
-    existing_keys = existing.select(*keys).dropDuplicates(keys)
+    existing_keys = existing.select(*keys)
     if when_matched:
         updates = new.join(existing_keys, keys, "left_semi")
-        new_keys = F.broadcast(new.select(*keys).dropDuplicates(keys))
+        new_keys = F.broadcast(new.select(*keys))
         return updates.unionByName(existing.join(new_keys, keys, "left_anti"))
     if when_not_matched:
         inserts = new.join(existing_keys, keys, "left_anti")

@@ -97,26 +97,31 @@ def test_upsert_duplicate_keys_raise_before_write(spark, lake):
 @pytest.mark.parametrize("versioned", [False, True])
 def test_facade_upsert_validates_keys_once(spark, tmp_path, monkeypatch, versioned):
     """One facade upsert runs the duplicate-key check exactly once: the
-    lake validates before its merge and the merge algebra does not
+    lake validates before its merge (the versioned lake inside its one
+    key aggregate, ``key_envelope``) and the merge algebra does not
     repeat it.  A duplicate-key delta still raises before any write."""
     from df_to_azure_spark import checks
     from df_to_azure_spark.operators import lake as lake_mod
     from df_to_azure_spark.operators import manifest, upsert
 
-    original = checks.ensure_unique_keys
     calls = []
 
-    def counting(df, keys):
-        calls.append(keys)
-        original(df, keys)
+    def counting(original):
+        def check(df, keys, *args, **kwargs):
+            calls.append(original.__name__)
+            return original(df, keys, *args, **kwargs)
 
+        return check
+
+    unique_keys = counting(checks.ensure_unique_keys)
     for mod in (checks, lake_mod, manifest, upsert):
-        monkeypatch.setattr(mod, "ensure_unique_keys", counting)
+        monkeypatch.setattr(mod, "ensure_unique_keys", unique_keys)
+    monkeypatch.setattr(manifest, "key_envelope", counting(checks.key_envelope))
     kw = dict(parquet=True, lake_root=str(tmp_path / "lake"), versioned=versioned)
     df_to_spark(sample_1(spark), "t", **kw)
     calls.clear()
     df_to_spark(sample_2(spark), "t", method="upsert", id_field="col_a", **kw)
-    assert len(calls) == 1
+    assert calls == ["key_envelope" if versioned else "ensure_unique_keys"]
     dup = spark.createDataFrame([(1, "a", "b"), (1, "c", "d")], ["col_a", "col_b", "col_c"])
     with pytest.raises(DuplicateKeysError):
         df_to_spark(dup, "t", method="upsert", id_field="col_a", **kw)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from df_to_azure_spark.exceptions import (
     ColumnMismatchError,
     ConcurrentWriteError,
+    DuplicateKeysError,
     PipelineRunError,
 )
 from df_to_azure_spark.operators.manifest import VersionedLake
@@ -581,6 +582,60 @@ def test_vacuum_age_gate_spares_inflight_staged_commit(spark, lake):
     assert any(r.startswith("_manifests/") for r in removed)
     got = {(r.id, r.v) for r in lake.read("t").collect()}
     assert got == {(1, "A"), (2, "b")}
+
+
+def test_keyed_writes_refuse_duplicate_delta_keys_before_any_write(spark, lake):
+    """The one key aggregate of a keyed write still refuses a repeated
+    delta key, with a sample row, and commits nothing; the keyed delete
+    takes a key SET, so a repeated key there is no error."""
+    lake.create(_df(spark, [(1, "a"), (2, "b")]), "t")
+    dup = _df(spark, [(2, "x"), (3, "z"), (2, "y")])
+    with pytest.raises(DuplicateKeysError, match="'id': 2"):
+        lake.upsert(dup, "t", ["id"])
+    with pytest.raises(DuplicateKeysError, match="'id': 2"):
+        lake.merge_keyed(dup, "t", ["id"])
+    with pytest.raises(DuplicateKeysError):
+        lake.merge_keyed(dup, "t", ["id"], when_matched=None)
+    assert lake.current_version("t") == 1
+    assert sorted(tuple(r) for r in lake.read("t").collect()) == [(1, "a"), (2, "b")]
+    assert lake.delete("t", dup.select("id"), ["id"]) == 1
+    assert lake.current_version("t") == 2
+    assert [tuple(r) for r in lake.read("t").collect()] == [(1, "a")]
+
+
+@pytest.mark.parametrize("size", [0, 4095, 4096, 4097, 65536])
+def test_small_file_reads_are_byte_exact(lake, tmp_path, size):
+    """Small-file reads cross py4j in 4 KiB chunks; whatever the file
+    size against the chunk, the bytes come back exact, and the text
+    read keeps every line ending (a trailing newline and CRLF too)."""
+    import random
+
+    blob = random.Random(size).randbytes(size)
+    (tmp_path / "blob").write_bytes(blob)
+    # compare outside the assert: pytest's diff of two long values is slow
+    got = lake._read_bytes(str(tmp_path / "blob"))
+    same = got == blob
+    assert same, f"{len(got)} bytes read, {len(blob)} written"
+    text = ("line\r\n" + "é" * 7 + "\n") * (size // 20 + 1)
+    data = text.encode("utf-8")[:size]
+    while True:  # cut on a character boundary
+        try:
+            text = data.decode("utf-8")
+            break
+        except UnicodeDecodeError:
+            data = data[:-1]
+    (tmp_path / "text").write_bytes(data)
+    got = lake._read_small(str(tmp_path / "text"))
+    same = got == text
+    assert same, f"{len(got)} chars read, {len(text)} written"
+
+
+def test_small_file_read_decodes_a_character_split_by_a_chunk(lake, tmp_path):
+    text = "x" * 4094 + "€" + "y" * 10 + "\n" + "z" * 4095 + "😀\n"
+    assert text.encode("utf-8")[4094:4097] == "€".encode("utf-8")  # straddles 4096
+    (tmp_path / "m.json").write_bytes(text.encode("utf-8"))
+    assert lake._read_small(str(tmp_path / "m.json")) == text
+    assert lake._read_bytes(str(tmp_path / "m.json")) == text.encode("utf-8")
 
 
 def test_publish_manifest_put_if_absent_on_local_fs(spark, lake):

@@ -167,3 +167,20 @@ def test_all_dialects_strip_whitespace_everywhere():
     for d in ("tsql", "ansi", "postgres", "mysql"):
         sql = merge_statement("t", ["  a  ", " b"], ["  a  "], dialect=d)
         assert "  a  " not in sql and " b " not in sql
+
+
+def test_create_staging_statement_per_dialect():
+    from df_to_azure_spark.operators.merge import create_staging_statement
+
+    assert create_staging_statement("t", "dbo") == (
+        "SELECT TOP 0 * INTO [staging].[t] FROM [dbo].[t];"
+    )
+    assert create_staging_statement("t", "public", dialect="postgres") == (
+        'CREATE TABLE "staging"."t" (LIKE "public"."t");'
+    )
+    assert create_staging_statement("t", "app", dialect="mysql") == (
+        "CREATE TABLE `staging`.`t` LIKE `app`.`t`;"
+    )
+    assert create_staging_statement("t", "dbo", dialect="ansi") == (
+        "CREATE TABLE staging.t AS SELECT * FROM dbo.t WITH NO DATA"
+    )

@@ -155,6 +155,22 @@ def test_merge_failure_surfaces_as_upsert_error(spark, sink):
     assert _read(sink, "sample_err").count() == 3  # target untouched
 
 
+def test_upsert_stages_in_the_target_types(spark, sink):
+    """The staging table copies the target's declared column types, so
+    a value only the target's VARCHAR(600) holds lands intact."""
+    base = spark.createDataFrame([(1, "short"), (2, "kept")], "k bigint, s string")
+    sink.write(base, "wide_s", schema="dbo", method="create",
+               dtypes={"s": "VARCHAR(600)"})
+    new = spark.createDataFrame(
+        [(1, "x" * 600), (3, "é" * 600)], "k bigint, s string"
+    )
+    sink.write(new, "wide_s", schema="dbo", method="upsert", id_field=["k"])
+    back = {r.k: r.s for r in _read(sink, "wide_s").collect()}
+    assert back == {1: "x" * 600, 2: "kept", 3: "é" * 600}
+    with pytest.raises(Exception):
+        _read(sink, "wide_s", schema="staging").collect()
+
+
 def test_upsert_duplicate_keys_raise_before_any_write(spark, sink):
     sink.write(_sample(spark), "sample_dup", schema="dbo", method="create")
     dup = spark.createDataFrame(
