@@ -25,6 +25,7 @@ same code addresses ``file://``, ``hdfs://`` or ``abfss://`` roots.
 from __future__ import annotations
 
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +39,9 @@ class ParquetLake:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
+        # (jvm, Hadoop Path class, Hadoop Configuration), looked up on
+        # first use: each lookup is a py4j round trip
+        self._hadoop = None
 
     # -- paths -----------------------------------------------------------
     def table_dir(self, table: str) -> str:
@@ -47,14 +51,46 @@ class ParquetLake:
         return f"{self.table_dir(table)}/data"
 
     def _fs(self, path: str):
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        """``(FileSystem, Path, jvm)`` for ``path``.  Hadoop's own
+        ``FileSystem.CACHE`` returns one instance per scheme and
+        authority, so only the class and configuration lookups are
+        kept here."""
+        if self._hadoop is None:
+            jvm = self.spark._jvm
+            self._hadoop = (
+                jvm,
+                jvm.org.apache.hadoop.fs.Path,
+                self.spark._jsc.hadoopConfiguration(),
+            )
+        jvm, path_cls, hconf = self._hadoop
+        jpath = path_cls(path)
         return jpath.getFileSystem(hconf), jpath, jvm
 
     def exists(self, table: str) -> bool:
         fs, jpath, _ = self._fs(self.data_dir(table))
         return fs.exists(jpath)
+
+    # -- batch ledger ----------------------------------------------------
+    def has_batch(self, table: str, batch_id: str) -> bool:
+        """True when a write with ``batch_id`` landed in ``table``
+        (see :meth:`write`)."""
+        fs, marker, _ = self._fs(self._batch_marker(table, batch_id))
+        return fs.exists(marker)
+
+    def _batch_marker(self, table: str, batch_id: str) -> str:
+        _check_batch_id(batch_id)
+        return f"{self.table_dir(table)}/_batches/{batch_id}"
+
+    def _write_batch(self, write, table: str, batch_id: str | None) -> None:
+        """Run ``write`` and record ``batch_id`` in the ledger: a marker
+        file ``_batches/<batch_id>`` under the table directory, created
+        after the data.  A crash between the two leaves the data without
+        its marker, so a replay writes the batch again (at-least-once)."""
+        marker = None if batch_id is None else self._batch_marker(table, batch_id)
+        write()
+        if marker is not None:
+            fs, path, _ = self._fs(marker)
+            fs.createNewFile(path)
 
     # -- reads -----------------------------------------------------------
     def read(self, table: str, merge_schema: bool = False) -> DataFrame:
@@ -77,18 +113,26 @@ class ParquetLake:
         method: str = "create",
         id_field: list[str] | str | None = None,
         partition_by: list[str] | str | None = None,
+        batch_id: str | None = None,
     ) -> None:
+        """Land ``df`` by ``create``, ``append`` or keyed ``upsert``.
+        ``batch_id`` names the write in the table's batch ledger, which
+        :meth:`has_batch` reads: a caller that replays a batch asks
+        first and skips it.  This lake writes a marker file after the
+        data (at-least-once); ``VersionedLake`` records the id inside the
+        write's own commit (exactly-once)."""
         ensure_unique_column_names(df)
         parts = [partition_by] if isinstance(partition_by, str) else list(partition_by or [])
         if method == "create":
-            self.create(df, table, partition_by=parts)
+            write = partial(self.create, df, table, partition_by=parts)
         elif method == "append":
-            self.append(df, table, partition_by=parts)
+            write = partial(self.append, df, table, partition_by=parts)
         elif method == "upsert":
             keys = [id_field] if isinstance(id_field, str) else list(id_field or [])
-            self.upsert(df, table, keys, partition_by=parts or None)
+            write = partial(self.upsert, df, table, keys, partition_by=parts or None)
         else:
             raise WrongMethodError(f"unknown lake method {method!r}")
+        self._write_batch(write, table, batch_id)
 
     def create(
         self,
@@ -295,7 +339,7 @@ class ParquetLake:
         ensure_unique_keys(df, keys)
         parts = partition_by or self.partition_columns(table)
         existing = self.read(table)
-        merged = upsert_frames(df, existing, keys, check_keys=False)
+        merged = upsert_frames(df, existing, keys)
         self._swap_in(merged, table, partition_by=parts or None)
 
     def delete(
@@ -395,9 +439,7 @@ class ParquetLake:
         # directories the lazy merge plan reads (the same self-overwrite
         # trap _swap_in avoids); affected partitions are delta-scale, so
         # pinning them is cheap — on a cluster, checkpoint durably instead
-        merged = upsert_frames(
-            df, affected, keys, sort=False, check_keys=False
-        ).localCheckpoint()
+        merged = upsert_frames(df, affected, keys, sort=False).localCheckpoint()
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
@@ -447,8 +489,7 @@ class ParquetLake:
         from df_to_azure_spark.operators.upsert import merge_frames
 
         merged = merge_frames(
-            df, self.read(table), keys, when_matched, when_not_matched,
-            check_keys=False,
+            df, self.read(table), keys, when_matched, when_not_matched
         )
         parts = self.partition_columns(table)
         self._swap_in(merged, table, partition_by=parts or None)
@@ -533,6 +574,13 @@ class ParquetLake:
             raise PipelineRunError(f"snapshot swap failed for table {table!r}")
         if had_old:
             fs.delete(old_path, True)
+
+
+def _check_batch_id(batch_id: str) -> None:
+    """A batch id names a file in a plain lake's ledger, so it must be a
+    plain token: no ``/``, not empty, not ``.`` or ``..``."""
+    if "/" in batch_id or batch_id in ("", ".", ".."):
+        raise ValueError(f"batch_id {batch_id!r} must be a plain token")
 
 
 def _merge_clauses(when_matched: str | None, when_not_matched: str | None) -> bool:

@@ -585,9 +585,10 @@ class VersionedLake(ParquetLake):
     path, :meth:`_keyed_write`, which reads and rewrites only the files
     whose zone maps meet the delta's key envelope.  Extra surface over
     the base lake:
-    ``versions``/``current_version``, time-travel ``read(version=...)``,
-    ``has_batch`` + ``batch_id`` idempotence markers, and a
-    retention-based ``vacuum(keep_last=...)``.  One difference: the
+    ``versions``/``current_version``, time-travel ``read(version=...)``
+    and a retention-based ``vacuum(keep_last=...)``.  The batch ledger
+    (``write(batch_id=...)``, ``has_batch``) lives in the manifest, so a
+    batch id commits atomically with its data.  One difference: the
     manifest schema is the table schema, so ``read`` takes no
     ``merge_schema`` — an append that adds columns widens the manifest
     schema, and every read shows them (NULL for older rows).
@@ -611,7 +612,6 @@ class VersionedLake(ParquetLake):
         # and ~2 s to load, with scan() pruning running as Arrow
         # kernels over the stat columns instead of a Python dict walk.
         self.checkpoint_interval = checkpoint_interval
-        self._pending_batch: str | None = None
         # raw + resolved manifest caches: manifests are immutable once
         # committed, so cached entries never go stale; bounded below
         self._raw_cache: dict[tuple[str, int], dict] = {}
@@ -2212,19 +2212,16 @@ class VersionedLake(ParquetLake):
         possibly over the grave of an externally-removed table whose
         higher versions are still raw-cached — so the whole raw history
         for the table is purged too, not just overwritten at v1."""
-        if n == 1:
+        self._purge_caches(table, raw=n == 1)
+        self._raw_cache[(table, n)] = json.loads(payload)
+
+    def _purge_caches(self, table: str, raw: bool = True) -> None:
+        """Drop ``table``'s resolved views and, with ``raw``, its raw
+        manifests too."""
+        if raw:
             self._raw_cache = {
                 k: v for k, v in self._raw_cache.items() if k[0] != table
             }
-        self._raw_cache[(table, n)] = json.loads(payload)
-        self._resolved_cache = {
-            k: v for k, v in self._resolved_cache.items() if k[0] != table
-        }
-
-    def _purge_caches(self, table: str) -> None:
-        self._raw_cache = {
-            k: v for k, v in self._raw_cache.items() if k[0] != table
-        }
         self._resolved_cache = {
             k: v for k, v in self._resolved_cache.items() if k[0] != table
         }
@@ -2287,7 +2284,7 @@ class VersionedLake(ParquetLake):
                 doc["stats"] = kept
         result = self._publish_doc(table, n, doc)
         if n % self.checkpoint_interval == 0:
-            self._write_ckpt_sidecar(table, n)
+            self._write_ckpt_sidecar(table, n, n)
         return result
 
     def _ckpt_table_from_resolved(self, m: dict):
@@ -2314,13 +2311,17 @@ class VersionedLake(ParquetLake):
             )
         return ckpt_from_dicts(m["files"], m.get("stats") or {}, schema, parts)
 
-    def _write_ckpt_sidecar(self, table: str, n: int) -> None:
-        """Best-effort columnar checkpoint for committed version ``n``
-        (the commit itself is already durable; see ``_commit_delta``)."""
+    def _write_ckpt_sidecar(self, table: str, n: int, source: int) -> None:
+        """Best-effort columnar checkpoint for committed version ``n``,
+        built from the resolved view of version ``source``: ``n`` itself,
+        or the version a restore re-published.  The commit is already
+        durable, so a failure here, in the resolve or the write, only
+        logs: resolution falls back to the previous root, with a longer
+        but still bounded walk, until the next checkpoint."""
         from df_to_azure_spark.operators.ckpt import ckpt_to_bytes
 
         try:
-            m = self.resolve_manifest(table, n)
+            m = self.resolve_manifest(table, source)
             self._write_bytes_atomic(
                 self._ckpt_path(table, n),
                 ckpt_to_bytes(self._ckpt_table_from_resolved(m)),
@@ -2338,29 +2339,17 @@ class VersionedLake(ParquetLake):
                 exc_info=True,
             )
 
-    def _carry_batches(self, snap: dict, batch_id: str | None) -> list[str]:
+    @staticmethod
+    def _carry_batches(snap: dict, batch_id: str | None) -> list[str]:
         """``snap``'s batch markers plus this write's own batch id."""
-        b = batch_id if batch_id is not None else self._pending_batch
-        return sorted(set(snap.get("batch_ids", [])) | ({b} if b else set()))
+        own = {batch_id} if batch_id else set()
+        return sorted(set(snap.get("batch_ids", [])) | own)
 
     # -- writes ----------------------------------------------------------
-    def write(
-        self,
-        df: DataFrame,
-        table: str,
-        method: str = "create",
-        id_field: list[str] | str | None = None,
-        partition_by: list[str] | str | None = None,
-        batch_id: str | None = None,
-    ) -> None:
-        self._pending_batch = batch_id
-        try:
-            super().write(
-                df, table, method=method, id_field=id_field,
-                partition_by=partition_by,
-            )
-        finally:
-            self._pending_batch = None
+    def _write_batch(self, write, table: str, batch_id: str | None) -> None:
+        """The batch id commits inside the write's own manifest, in the
+        same atomic publish as its data: exactly-once."""
+        write(batch_id=batch_id)
 
     def create(
         self,
@@ -2431,10 +2420,9 @@ class VersionedLake(ParquetLake):
             "uniform_schema": True,
         }
         files, schema, stats = self._stage_files(df, table, layout)
-        b = batch_id if batch_id is not None else self._pending_batch
         self._commit(
-            table, files, layout, schema, expected, [b] if b else [],
-            stats=stats, op="create",
+            table, files, layout, schema, expected,
+            [batch_id] if batch_id else [], stats=stats, op="create",
         )
 
     def append(
@@ -2584,7 +2572,7 @@ class VersionedLake(ParquetLake):
                 "use the full upsert for partition-changing updates"
             )
         affected = existing.where(in_touched)
-        merged = upsert_frames(df, affected, keys, sort=False, check_keys=False)
+        merged = upsert_frames(df, affected, keys, sort=False)
         new_files, _, new_stats = self._stage_files(merged, table, snap)
         touched_dirs = {rel.split("/")[1] for rel in new_files}
         m = self.resolve_manifest(table, expected)
@@ -2716,6 +2704,7 @@ class VersionedLake(ParquetLake):
         table: str,
         keys: list[str],
         partition_by: list[str] | None = None,
+        batch_id: str | None = None,
     ) -> None:
         """Keyed upsert (the reference's ``export.py:362-404``): rows of
         ``df`` replace the table's rows with the same key, the rest are
@@ -2726,13 +2715,14 @@ class VersionedLake(ParquetLake):
         key never matches, so a replay would insert its row again);
         either violation raises before any write.  ``partition_by`` is
         accepted for the base signature: the table's declared layout
-        wins, as for ``append``.  The commit's history label is
-        ``merge``."""
+        wins, as for ``append``.  ``batch_id`` is recorded in the commit,
+        as for ``append``.  The commit's history label is ``merge``."""
         self._keyed_write(
             table, df, keys,
             lambda delta, affected: upsert_frames(
-                delta, affected, keys, check_keys=False, sort=False
+                delta, affected, keys, sort=False
             ),
+            batch_id=batch_id,
         )
 
     def merge_keyed(
@@ -2779,8 +2769,7 @@ class VersionedLake(ParquetLake):
         return self._keyed_write(
             table, df, keys,
             lambda delta, affected: merge_frames(
-                delta, affected, keys, when_matched, when_not_matched,
-                check_keys=False,
+                delta, affected, keys, when_matched, when_not_matched
             ),
         )
 
@@ -2828,6 +2817,7 @@ class VersionedLake(ParquetLake):
         replace: bool = True,
         op: str = "merge",
         unique: bool = True,
+        batch_id: str | None = None,
     ) -> int:
         """The one keyed-write path.  ``df``'s columns take the table's
         types, as in a SQL MERGE into a typed table: carried files keep
@@ -2846,9 +2836,10 @@ class VersionedLake(ParquetLake):
         The commit is against the version the candidates came from, so
         an interleaved commit fails this one (``ConcurrentWriteError``);
         one that replaces every live file is a full manifest
-        (:meth:`_commit_delta`).  An empty ``df`` commits nothing.
-        Returns the number of files replaced and sets
-        ``last_rewrite_files = (0, replaced, carried)``."""
+        (:meth:`_commit_delta`); the commit records ``batch_id``.  An
+        empty ``df`` commits nothing.  Returns the number of files
+        replaced and sets ``last_rewrite_files = (0, replaced,
+        carried)``."""
         v = self.current_version(table)
         if v is None:
             raise PipelineRunError(
@@ -2892,7 +2883,7 @@ class VersionedLake(ParquetLake):
             snap,
             m["schema"],
             v,
-            self._carry_batches(snap, None),
+            self._carry_batches(snap, batch_id),
             stats=new_stats,
             op=op,
         )
@@ -2995,34 +2986,13 @@ class VersionedLake(ParquetLake):
         if _is_ckpt_rooted(m):
             # the target's stats live (mostly) in its chain-root sidecar,
             # which the full-JSON commit above cannot carry — write the
-            # new version's own sidecar from the SAME resolution so the
-            # restored table keeps its pruning power (resolution prefers
-            # the sidecar over the partial-stats JSON).  Best-effort like
-            # every sidecar write (_write_ckpt_sidecar): the restore is
-            # already durable at this point, so an IO failure here must
-            # degrade to partial-stats JSON (pruning lost, results
-            # correct) instead of raising out of a committed restore —
-            # a caller retry would otherwise publish a duplicate.
-            from df_to_azure_spark.operators.ckpt import ckpt_to_bytes
-
-            try:
-                self._write_bytes_atomic(
-                    self._ckpt_path(table, n),
-                    ckpt_to_bytes(self._ckpt_table_from_resolved(m)),
-                )
-                self._resolved_cache.pop((table, n), None)
-            except Exception:  # noqa: BLE001 — sidecar loss is recoverable
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "checkpoint sidecar write failed for restored %s v%d; "
-                    "the restore itself is committed — pruning degrades to "
-                    "the JSON manifest's partial stats until the next "
-                    "checkpoint",
-                    table,
-                    n,
-                    exc_info=True,
-                )
+            # new version's own sidecar from the target's resolution so
+            # the restored table keeps its pruning power (resolution
+            # prefers the sidecar over the partial-stats JSON).  Best
+            # effort: a failure degrades to partial-stats JSON (pruning
+            # lost, results correct) instead of raising out of a
+            # committed restore, which a caller retry would duplicate.
+            self._write_ckpt_sidecar(table, n, version)
         return n
 
     # -- maintenance -----------------------------------------------------

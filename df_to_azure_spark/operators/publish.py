@@ -27,7 +27,7 @@ from df_to_azure_spark.operators.expectations import (
     Expectation,
     evaluate_expectations,
 )
-from df_to_azure_spark.operators.lake import ParquetLake
+from df_to_azure_spark.operators.lake import ParquetLake, _check_batch_id
 
 __all__ = ["AuditFailedError", "PublishReport", "publish_with_audit"]
 
@@ -68,51 +68,31 @@ def publish_with_audit(
 
     Retry contract (round-9 ADVICE): retries are safe by construction
     for idempotent methods (``create`` overwrites, ``upsert`` is keyed).
-    For ``method='append'`` pass a caller-stable ``batch_id`` — the
-    publish then writes a per-batch marker next to the table and a
-    retry that finds the marker SKIPS the clean-row append instead of
-    duplicating already-published rows (the quarantine append still
-    runs, repairing a crash between the two writes).  An ``append``
-    without ``batch_id`` keeps the documented non-atomic window: a
-    crash after the publish write but before return means a blind retry
-    appends the batch twice.
+    For ``method='append'`` pass a caller-stable ``batch_id`` (a plain
+    token).  The publish write then records it in the table's batch
+    ledger (``lake.write(batch_id=...)``), and a retry that finds it
+    there (``lake.has_batch``) SKIPS the clean-row write instead of
+    duplicating already-published rows.  The quarantine append carries
+    its own derived id, ``<batch_id>.q``, so a retry after a crash
+    anywhere in this function duplicates neither table and replays only
+    the write that is missing.  An ``append`` without ``batch_id`` keeps
+    the documented non-atomic window: a crash after the publish write
+    but before return means a blind retry appends the batch twice.
+
+    How safe a marked write is depends on the lake's ledger: a
+    :class:`~df_to_azure_spark.operators.manifest.VersionedLake` records
+    the id inside the write's manifest commit (exactly-once); a plain
+    ``ParquetLake`` writes a marker file after the data, so a crash
+    between the two re-writes the batch once on retry (duplicates
+    possible, drops impossible).
 
     One audit scan (fused aggregate), one publish write, at most one
-    quarantine write — no per-rule passes.
-
-    On a :class:`~df_to_azure_spark.operators.manifest.VersionedLake`
-    the ``batch_id`` marker is recorded INSIDE the atomic manifest
-    commit, so for the PUBLISHED table "rows published" and "marker
-    exists" are one fact and the publish-succeeds-then-marker-crashes
-    window of the plain lake's side-file marker does not exist.  The
-    quarantine append is a separate commit carrying its own derived
-    marker (``<batch_id>.q``): a crash between the two writes loses
-    nothing — the retry skips the already-marked publish and replays
-    only the missing quarantine append, never duplicating either.
-
-    On a plain ``ParquetLake`` with ``batch_id`` set, the quarantine
-    append carries the same derived marker as a SIDE FILE
-    (``_batches/<batch_id>.q`` under the quarantine table) — so a retry
-    never re-appends already-quarantined rows either; the side-file
-    marker keeps the plain lake's documented non-atomic window (marker
-    lands after the write, so a crash exactly between them re-appends
-    once on retry — duplicates possible, drops impossible)."""
-    from df_to_azure_spark.operators.manifest import VersionedLake
-
+    quarantine write — no per-rule passes."""
     if not rules:
         raise ValueError("publish_with_audit needs at least one rule")
-    versioned = isinstance(lake, VersionedLake)
-    marker_fs = marker_path = None
-    already_published = False
     if batch_id is not None:
-        if "/" in batch_id or batch_id in ("", ".", ".."):
-            raise ValueError(f"batch_id {batch_id!r} must be a plain token")
-        if versioned:
-            already_published = lake.has_batch(table, batch_id)
-        else:
-            marker = f"{lake.table_dir(table)}/_batches/{batch_id}"
-            marker_fs, marker_path, _ = lake._fs(marker)
-            already_published = marker_fs.exists(marker_path)
+        _check_batch_id(batch_id)
+    already_published = batch_id is not None and lake.has_batch(table, batch_id)
     audit_rows = evaluate_expectations(df, rules).collect()
     n_in = int(audit_rows[0]["n_rows"]) if audit_rows else 0
     worst = max((r["n_violations"] for r in audit_rows), default=0)
@@ -127,15 +107,9 @@ def publish_with_audit(
                 f"tolerance {max_violation_frac} (worst {worst}/{n_in} rows)"
             )
         if not already_published:
-            if versioned and batch_id is not None:
-                lake.write(
-                    df, table, method=method, id_field=id_field,
-                    batch_id=batch_id,
-                )
-            else:
-                lake.write(df, table, method=method, id_field=id_field)
-                if marker_path is not None:
-                    marker_fs.createNewFile(marker_path)
+            lake.write(
+                df, table, method=method, id_field=id_field, batch_id=batch_id
+            )
         return PublishReport(table, n_in, n_in, 0, audit_rows)
 
     clean_pred = F.lit(True)
@@ -160,48 +134,17 @@ def publish_with_audit(
     # window between them loses only the quarantine audit trail, never
     # published data.  Re-running the call repairs it safely when the
     # method is idempotent (create/upsert) or when ``batch_id`` is set
-    # (the marker below makes the retry skip the clean append); an
-    # unmarked append retry after a mid-window crash duplicates the
-    # published rows — see the retry contract in the docstring.
+    # (the ledger makes the retry skip the clean append); an unmarked
+    # append retry after a mid-window crash duplicates the published
+    # rows — see the retry contract in the docstring.
     if not already_published:
-        if versioned and batch_id is not None:
-            lake.write(
-                clean, table, method=method, id_field=id_field,
-                batch_id=batch_id,
-            )
-        else:
-            lake.write(clean, table, method=method, id_field=id_field)
-            if marker_path is not None:
-                marker_fs.createNewFile(marker_path)
-    if n_dirty:
+        lake.write(
+            clean, table, method=method, id_field=id_field, batch_id=batch_id
+        )
+    q_batch = None if batch_id is None else f"{batch_id}.q"
+    if n_dirty and not (
+        q_batch is not None and lake.has_batch(quarantine_table, q_batch)
+    ):
         method_q = "append" if lake.exists(quarantine_table) else "create"
-        if versioned and batch_id is not None:
-            # the quarantine commit carries its own derived marker, so a
-            # retry after a crash anywhere in this function duplicates
-            # neither published nor quarantined rows (round-11 ADVICE:
-            # the published table's marker alone left this append
-            # unguarded on retries)
-            q_marker = f"{batch_id}.q"
-            if not lake.has_batch(quarantine_table, q_marker):
-                lake.write(
-                    dirty, quarantine_table, method=method_q,
-                    batch_id=q_marker,
-                )
-        elif batch_id is not None:
-            # mirror the versioned path's derived marker with a side
-            # file (round-12 ADVICE): without it, a retry after a crash
-            # that followed a successful quarantine append would skip
-            # the publish (marker exists) but re-append the dirty rows,
-            # duplicating the quarantine table.  Same non-atomic window
-            # as the plain lake's publish marker, same direction: the
-            # marker lands AFTER the write, so a crash between them
-            # re-appends once — never silently drops.
-            q_marker = f"{lake.table_dir(quarantine_table)}/_batches/{batch_id}.q"
-            q_fs, q_path, _ = lake._fs(q_marker)
-            if not q_fs.exists(q_path):
-                lake.write(dirty, quarantine_table, method=method_q)
-                q_fs.mkdirs(q_path.getParent())
-                q_fs.createNewFile(q_path)
-        else:
-            lake.write(dirty, quarantine_table, method=method_q)
+        lake.write(dirty, quarantine_table, method=method_q, batch_id=q_batch)
     return PublishReport(table, n_in, n_in - n_dirty, n_dirty, audit_rows)

@@ -34,12 +34,12 @@ def scd2_apply(
     effective_ts: dt.datetime,
     valid_from: str = "valid_from",
     valid_to: str = "valid_to",
-    check_keys: bool = True,
 ) -> DataFrame:
     """Apply ``delta`` (payload columns only, no validity columns) to the
-    versioned ``current`` table at ``effective_ts``."""
-    if check_keys:
-        ensure_unique_keys(delta, keys)
+    versioned ``current`` table at ``effective_ts``.  ``delta``'s keys
+    must be unique (``DuplicateKeysError`` otherwise): two new versions
+    of one key would both open."""
+    ensure_unique_keys(delta, keys)
     ts = F.lit(effective_ts).cast(current.schema[valid_from].dataType)
     delta_keys = F.broadcast(delta.select(*keys).dropDuplicates(keys))
 

@@ -42,19 +42,16 @@ def upsert_frames(
     new: DataFrame,
     existing: DataFrame,
     keys: list[str],
-    check_keys: bool = True,
     sort: bool = True,
 ) -> DataFrame:
     """Row-level keyed upsert; see module docstring for the algebra.
 
     The key columns of ``new`` are broadcast for the anti-join — correct
     whenever the delta's keys fit in executor memory (deltas
-    are usually ≪ target).  ``check_keys=False`` skips the duplicate-key
-    validation for callers that already ran it.
+    are usually ≪ target).  Keys of ``new`` are not validated here: the
+    write verb that calls this checks them first.
     """
     check_same_columns(new, existing)
-    if check_keys:
-        ensure_unique_keys(new, keys)
     # an anti join's result does not depend on how often a key repeats
     # on the right, so the key side needs no dedup shuffle
     new_keys = F.broadcast(new.select(*keys))
@@ -74,7 +71,6 @@ def merge_frames(
     keys: list[str],
     when_matched: str | None = "update_all",
     when_not_matched: str | None = "insert_all",
-    check_keys: bool = True,
 ) -> DataFrame:
     """MERGE algebra with Delta-style clause selection (SURVEY §2.3 W3):
 
@@ -88,12 +84,11 @@ def merge_frames(
     plus a union — the delta's key set is the only thing joined against
     the big side, so the target never carries payload through a shuffle
     it doesn't need.  ``ParquetLake.merge`` materializes this through the
-    snapshot swap (or hands the clauses to Delta when available)."""
+    snapshot swap (or hands the clauses to Delta when available).  As
+    for ``upsert_frames``, the caller validates the keys."""
     check_same_columns(new, existing)
-    if check_keys:
-        ensure_unique_keys(new, keys)
     if when_matched and when_not_matched:
-        return upsert_frames(new, existing, keys, sort=False, check_keys=False)
+        return upsert_frames(new, existing, keys, sort=False)
     existing_keys = existing.select(*keys)
     if when_matched:
         updates = new.join(existing_keys, keys, "left_semi")

@@ -74,7 +74,7 @@ def w4_upsert_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4 row-level upsert algebra: new ∪ (existing anti new)."""
     customer = load_table(spark, sf_dir, "customer")
     return upsert_frames(
-        _upsert_delta(customer), customer, ["c_custkey"], sort=False, check_keys=False
+        _upsert_delta(customer), customer, ["c_custkey"], sort=False
     )
 
 
@@ -104,7 +104,7 @@ def w3_merge_update_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
     return merge_frames(
         _upsert_delta(customer), customer, ["c_custkey"],
-        when_matched="update_all", when_not_matched=None, check_keys=False,
+        when_matched="update_all", when_not_matched=None,
     )
 
 
@@ -134,7 +134,7 @@ def w3_merge_insert_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
     return merge_frames(
         _upsert_delta(customer), customer, ["c_custkey"],
-        when_matched=None, when_not_matched="insert_all", check_keys=False,
+        when_matched=None, when_not_matched="insert_all",
     )
 
 
@@ -250,9 +250,7 @@ def scd2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal",
         "c_mktsegment",
     )
-    return scd2_apply(
-        current, delta, ["c_custkey"], dt.datetime(2024, 6, 1), check_keys=False
-    )
+    return scd2_apply(current, delta, ["c_custkey"], dt.datetime(2024, 6, 1))
 
 
 SCD2_ORACLE = """

@@ -447,7 +447,7 @@ def stream_cdc_rewrite_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         upsert_frames(
             _upsert_delta(customer), customer, ["c_custkey"],
-            sort=False, check_keys=False,
+            sort=False,
         ).withColumn("change_type", F.lit("insert"))
     )
     return (

@@ -145,56 +145,34 @@ def make_lake_batch_handler(
       :class:`~df_to_azure_spark.operators.manifest.VersionedLake` a
       batch with a NULL key raises before any write: a NULL key never
       matches, so a replay would insert its row again;
-    - no keys, plain ``ParquetLake`` → batches APPEND, guarded by a
-      per-table marker-file ledger (``_batches/<batch_id>`` under the
-      table dir — one filesystem stat per batch, no data read).  The
-      marker lands after the data append, so this mode is at-least-once
-      with a one-batch replay window on crash between append and marker;
-    - no keys, :class:`~df_to_azure_spark.operators.manifest.
-      VersionedLake` → EXACTLY-ONCE: the epoch id commits as an
-      in-manifest ``batch_id`` in the SAME atomic rename as the data, so
-      the append-then-marker crash window does not exist — a replayed
-      epoch is recognized from the manifest and skipped.  This is the
-      Delta-streaming-sink semantics (txn version in the commit) on the
-      minimal manifest log.
+    - no keys → batches APPEND under the id ``epoch-<batch_id>`` in the
+      lake's batch ledger, and a replayed epoch the ledger already holds
+      is skipped.  A ``VersionedLake`` commits the id in the same atomic
+      manifest publish as the data, so the sink is exactly-once (the
+      Delta streaming sink's txn version in the commit).  A plain
+      ``ParquetLake`` writes a marker file after the data, so the sink
+      is at-least-once, with a one-batch replay window on a crash
+      between the two.
     """
-    from df_to_azure_spark.operators.manifest import VersionedLake
-
     keys = [id_field] if isinstance(id_field, str) else list(id_field or [])
-    versioned = isinstance(lake, VersionedLake)
-
-    def _ledger_path(batch_id: int):
-        fs, _, jvm = lake._fs(lake.table_dir(table))
-        return fs, jvm.org.apache.hadoop.fs.Path(
-            f"{lake.table_dir(table)}/_batches/{int(batch_id)}"
-        )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        exists = lake.exists(table)
         if keys:
-            if lake.exists(table):
-                lake.upsert(batch_df, table, keys)
-            else:
-                lake.create(batch_df, table)
+            lake.write(
+                batch_df, table, method="upsert" if exists else "create",
+                id_field=keys,
+            )
             return
-        if versioned:
-            bid = f"epoch-{int(batch_id)}"
-            if lake.has_batch(table, bid):
-                return  # replayed epoch — its manifest commit happened
-            if lake.exists(table):
-                lake.append(batch_df, table, batch_id=bid)
-            else:
-                lake.create(batch_df, table, batch_id=bid)
-            return
-        fs, marker = _ledger_path(batch_id)
-        if fs.exists(marker):
-            return  # replayed batch — already applied
-        if lake.exists(table):
-            lake.append(batch_df, table)
-        else:
-            lake.create(batch_df, table)
-        fs.mkdirs(marker)
+        epoch = f"epoch-{int(batch_id)}"
+        if lake.has_batch(table, epoch):
+            return  # replayed epoch — already applied
+        lake.write(
+            batch_df, table, method="append" if exists else "create",
+            batch_id=epoch,
+        )
 
     return handle
 

@@ -39,7 +39,7 @@ def test_upsert_matches_dict_model(spark, new, existing):
     model = dict(existing)
     model.update(dict(new))  # row-level: new wins on key collision
 
-    out = upsert_frames(new_df, ex_df, ["k"], sort=False, check_keys=False)
+    out = upsert_frames(new_df, ex_df, ["k"], sort=False)
     got = {r.k: r.v for r in out.collect()}
     assert got == model
 
@@ -126,7 +126,7 @@ def test_composite_key_upsert_with_null_values(spark, new, existing):
     model = {(k1, k2): v for k1, k2, v in existing}
     model.update({(k1, k2): v for k1, k2, v in new})
 
-    out = upsert_frames(new_df, ex_df, ["k1", "k2"], sort=False, check_keys=False)
+    out = upsert_frames(new_df, ex_df, ["k1", "k2"], sort=False)
     got = {(r.k1, r.k2): r.v for r in out.collect()}
     assert got == model
 
@@ -216,7 +216,6 @@ def test_merge_clauses_match_dict_models(spark, new, existing):
     ]:
         out = merge_frames(
             new_df, ex_df, ["k"], when_matched=wm, when_not_matched=wnm,
-            check_keys=False,
         )
         got = {r.k: r.v for r in out.collect()}
         assert got == model, (wm, wnm)
