@@ -59,6 +59,11 @@ def _as_double(col) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
+# ``dot`` as SQL text for the hot builders: the same sequential left fold,
+# parsed once on the JVM instead of built node by node over py4j
+_DOT_SQL = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+
 def dot(a: Column, b: Column) -> Column:
     """Sequential left-fold sum of elementwise products (stable order)."""
     return F.aggregate(
@@ -88,18 +93,20 @@ def cosine_topk(
     plan for small-q × huge-corpus), cosine per pair, then per-query
     top-k with a rank window partitioned by query id.  Ties break on
     corpus id after rounding, so results are stable across partitionings.
+    The projections and the score are SQL text with the same fold as
+    ``cosine`` (``_DOT_SQL``): a Column built node by node costs one py4j
+    round trip per node, a SQL string one per projection.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+    as_double = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+    q = queries.selectExpr(f"`{id_col}` AS query_id", f"{as_double} AS qv")
+    c = _spread(corpus).selectExpr(f"`{id_col}` AS neighbor_id", f"{as_double} AS cv")
+    cos = (
+        f"{_DOT_SQL.format(a='qv', b='cv')} / (sqrt({_DOT_SQL.format(a='qv', b='qv')})"
+        f" * sqrt({_DOT_SQL.format(a='cv', b='cv')}))"
     )
-    c = _spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    scored = c.join(F.broadcast(q)).where(F.col("query_id") != F.col("neighbor_id"))
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), round_digits).alias("cos_sim"),
+    scored = c.join(F.broadcast(q)).where("query_id != neighbor_id")
+    scored = scored.selectExpr(
+        "query_id", "neighbor_id", f"round({cos}, {round_digits}) AS cos_sim"
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (

@@ -165,6 +165,11 @@ class ParquetLake:
             else:
                 df = df.repartitionByRange(*sort_by)
             df = df.sortWithinPartitions(*sort_by)
+        # a create starts a fresh batch ledger.  The markers go before the
+        # data: a crash in between makes a replay land its batch again
+        # (at-least-once), never skip it.
+        fs, ledger, _ = self._fs(f"{self.table_dir(table)}/_batches")
+        fs.delete(ledger, True)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)

@@ -22,6 +22,9 @@ family environment-independent.
 
 from __future__ import annotations
 
+import functools
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,8 +54,53 @@ def normalize_ts_col(df: DataFrame, col: str) -> DataFrame:
     )
 
 
+@functools.lru_cache(maxsize=1)
+def _footer_schema(spark: SparkSession):
+    """``path -> StructType | None``: the Spark schema of the single
+    Parquet file at ``path``, read from its footer on the driver, or None
+    when ``path`` is not a file.  The JVM handles are looked up once per
+    session: each hop of ``spark._jvm.a.b.c`` is one py4j round trip."""
+    jvm = spark._jvm
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    path_cls = jvm.org.apache.hadoop.fs.Path
+    hconf = spark._jsc.hadoopConfiguration()
+    file_reader = jvm.org.apache.parquet.hadoop.ParquetFileReader
+    metadata = jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+    skip_row_groups = metadata.SKIP_ROW_GROUPS
+    footer_cls = jvm.org.apache.parquet.hadoop.Footer
+    file_format = parquet.ParquetFileFormat
+    converter_cls = parquet.ParquetToSparkSchemaConverter
+    sqlconf = spark._jsparkSession.sessionState().conf()
+
+    def schema_of(path: str) -> T.StructType | None:
+        jpath = path_cls(path)
+        if not jpath.getFileSystem(hconf).isFile(jpath):
+            return None
+        footer = footer_cls(jpath, file_reader.readFooter(hconf, jpath, skip_row_groups))
+        # the converter reads the session conf when built, so it is built per call
+        jschema = file_format.readSchemaFromFooter(footer, converter_cls(sqlconf))
+        return T.StructType.fromJson(json.loads(jschema.json()))
+
+    return schema_of
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    """Read the star-schema table ``{sf_dir}/{name}.parquet``, with its
+    event timestamps normalized (module docstring).
+
+    When the path is one file, its schema is read from the file's footer
+    on the driver and handed to the reader, so building the frame runs no
+    Spark job.  The conversion is Spark's own
+    (``ParquetFileFormat.readSchemaFromFooter`` with a converter built
+    from the session's SQL conf), the code Spark's schema inference runs
+    on this same footer inside a job, so the schema is unchanged,
+    ``nanosAsLong`` and NTZ inference included.  A directory of part
+    files, or a missing path, is read by ``spark.read.parquet``, which
+    infers the schema."""
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    schema = _footer_schema(spark)(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for col in _EVENT_TS_COLUMNS.get(name, []):
         df = normalize_ts_col(df, col)
     return df

@@ -55,6 +55,19 @@ def test_write_records_batch_for_every_method(spark, tmp_path, lake_cls):
     assert lake.read("t").count() == 4
 
 
+@pytest.mark.parametrize("lake_cls", [ParquetLake, VersionedLake])
+def test_create_resets_the_ledger(spark, tmp_path, lake_cls):
+    lake = lake_cls(spark, str(tmp_path / "lake"))
+    df = spark.createDataFrame([(1, "a")], "id int, v string")
+    lake.write(df, "t", method="create", batch_id="x")
+    assert lake.has_batch("t", "x")
+    lake.create(df, "t")
+    assert not lake.has_batch("t", "x")
+    lake.write(df, "t", method="append", batch_id="x")
+    assert lake.has_batch("t", "x")
+    assert lake.read("t").count() == 2
+
+
 def test_plain_lake_refuses_a_path_as_batch_id(spark, tmp_path):
     lake = ParquetLake(spark, str(tmp_path / "lake"))
     df = spark.createDataFrame([(1,)], "id int")

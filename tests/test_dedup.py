@@ -3,6 +3,7 @@ SimHash locality."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from df_to_azure_spark.functions import dedup as D
@@ -265,6 +266,33 @@ def test_minhash_odd_band_width(spark):
     pairs = D.minhash_lsh_pairs(docs, num_hashes=10, bands=2, threshold=0.0).collect()
     est = {(r.id_a, r.id_b): r.est_jaccard for r in pairs}
     assert est[(1, 2)] == 1.0
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(64, 16), (10, 2)])
+def test_banded_keys_match_python_packing(spark, sf_smoke, num_hashes, bands):
+    """Every band row packs its signature slice pairwise as h_even·M +
+    h_odd, with an odd tail standing alone (10/2 → 5 components)."""
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
+    sigs = D.minhash_signatures(docs, num_hashes=num_hashes)
+    banded, bucket_cols = D._banded(sigs, "doc_id", num_hashes, bands)
+    width = num_hashes // bands
+    n_keys = (width + 1) // 2
+    assert bucket_cols == ["band"] + [f"k{j}" for j in range(n_keys)]
+    assert banded.dtypes == [("doc_id", "bigint"), ("band", "int")] + [
+        (f"k{j}", "bigint") for j in range(n_keys)
+    ]
+    expected = []
+    for r in sigs.collect():
+        for b in range(bands):
+            part = r.sig[b * width : (b + 1) * width]
+            keys = [
+                part[i] * D.MINHASH_PRIME + part[i + 1] if i + 1 < width else part[i]
+                for i in range(0, width, 2)
+            ]
+            expected.append((r.doc_id, b, *keys))
+    got = [tuple(r) for r in banded.collect()]
+    assert len(expected) > bands
+    assert sorted(got) == sorted(expected)
 
 
 def test_minhash_arrow_kernel_matches_expression_twin(spark):

@@ -42,6 +42,30 @@ def test_cosine_matches_python(spark, sf_smoke):
     assert abs(got - expected) < 1e-6
 
 
+@pytest.mark.parametrize("digits", [8, 16])
+def test_cosine_topk_score_is_bit_identical_to_cosine(spark, sf_smoke, digits):
+    """The SQL-text score is the Column ``cosine`` fold, bit for bit; 16
+    digits keep differences that rounding to 8 would hide."""
+    from pyspark.sql import functions as F
+
+    emb = _emb(spark, sf_smoke)
+    top = S.cosine_topk(emb.where("vec_id < 5"), emb, k=10, round_digits=digits)
+    vecs = emb.select("vec_id", S._as_double("embedding").alias("v"))
+    ref = (
+        top.join(vecs.toDF("query_id", "qv"), "query_id")
+        .join(vecs.toDF("neighbor_id", "cv"), "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            "cos_sim",
+            F.round(S.cosine(F.col("qv"), F.col("cv")), digits).alias("ref"),
+        )
+        .collect()
+    )
+    assert len(ref) == 50
+    assert all(r.cos_sim == r.ref for r in ref)
+
+
 def test_lsh_topk_recall_against_exact(spark, sf_smoke):
     emb = _emb(spark, sf_smoke)
     dim = len(emb.limit(1).collect()[0].embedding)

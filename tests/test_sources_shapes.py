@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import types as T
 
 from df_to_azure_spark.sources import load_table, normalize_ts_col
+from df_to_azure_spark.sources.tables import STAR_SCHEMA_TABLES
 
 _INSTANTS_US = [
     1704067200_000_000,  # 2024-01-01 00:00:00 UTC
@@ -90,3 +91,46 @@ def test_unsupported_encoding_fails_loudly(spark):
 def test_missing_column_is_noop(spark):
     df = spark.createDataFrame([(1,)], "event_id long")
     assert normalize_ts_col(df, "ts") is df
+
+
+# --- load_table reads a single file's schema from its footer ---------------
+
+def _inferred(spark, sf_dir, name):
+    """What ``load_table`` returned when it let Spark infer the schema."""
+    return normalize_ts_col(spark.read.parquet(f"{sf_dir}/{name}.parquet"), "ts")
+
+
+@pytest.mark.parametrize("name", STAR_SCHEMA_TABLES)
+def test_footer_schema_equals_inferred_schema(spark, sf_smoke, name):
+    assert load_table(spark, sf_smoke, name).schema == _inferred(spark, sf_smoke, name).schema
+
+
+@pytest.mark.parametrize("shape", ["nanos", "ntz", "tz"])
+def test_footer_schema_equals_inferred_schema_per_ts_shape(spark, shape_dirs, shape):
+    d = shape_dirs[shape]
+    assert load_table(spark, d, "events").schema == _inferred(spark, d, "events").schema
+
+
+def test_load_table_runs_no_spark_job(spark, sf_smoke):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("load_table_jobs", "load_table builds without a job")
+    try:
+        for name in STAR_SCHEMA_TABLES:
+            load_table(spark, sf_smoke, name)
+        assert list(tracker.getJobIdsForGroup("load_table_jobs")) == []
+        # the group does count jobs: the inferring reader runs one
+        spark.read.parquet(f"{sf_smoke}/nation.parquet")
+        assert len(tracker.getJobIdsForGroup("load_table_jobs")) >= 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_directory_of_part_files_loads(spark, tmp_path):
+    rows = [(i, f"n{i}") for i in range(20)]
+    df = spark.createDataFrame(rows, "id bigint, name string")
+    df.repartition(3).write.parquet(str(tmp_path / "things.parquet"))
+    out = load_table(spark, str(tmp_path), "things")
+    assert out.schema == spark.read.parquet(str(tmp_path / "things.parquet")).schema
+    assert sorted(tuple(r) for r in out.collect()) == rows
